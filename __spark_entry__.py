@@ -1,9 +1,9 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
-The driver's verify runs ``entry(spark)`` as a smoke check, runs
-each ``queries()[name]`` at sf=0.01 and compares it against the
-matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
-order-insensitive value-hash → CORRECTNESS_r{N}.json).
+``entry(spark)`` is a smoke check; each ``queries()[name]`` at
+sf=0.01 is compared against the matching ``oracle_sql()[name]`` on
+DuckDB (row-count + schema + order-insensitive value-hash), as
+``tests/test_parity.py`` and ``scripts/driver_sim.py`` do.
 
 Implementation lives in ``data_webhooks_spark``; the operator
 inventory is SURVEY.md §2 and every key here maps 1:1 to a row there.

@@ -2,7 +2,8 @@
 
 Each operator module contributes QUERIES (name -> (spark, sf_dir) ->
 DataFrame) and ORACLE (name -> DuckDB SQL). Keys must be globally
-unique; ORACLE keys must be a subset of QUERIES keys.
+unique; ORACLE keys must be a subset of QUERIES keys. Keys come back
+in module order; consumers index by name.
 """
 
 from __future__ import annotations
@@ -11,125 +12,6 @@ import importlib
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-
-# The external driver's correctness gate checks the FIRST 50 keys, so
-# key order is an explicit per-round rotation: rounds 1-2 validated the
-# scalar/relational/agg families, round 3 the windows/tpch/text/
-# semistructured block, round 4 the joins/scans/UDFs/sampling block,
-# rounds 5-10 each rotated in that round's additions plus (hand-
-# curated) re-verifies for keys whose code changed.
-#
-# ROUND-11 WINDOW — AUTOMATED (r10 verdict item 2): the head is the
-# exact output of `python scripts/window_select.py --propose`, which
-# flags every key whose implementing function — or any module-level
-# name in its TRANSITIVE dependency closure, followed across package-
-# local imports and decorator expressions — changed after the snapshot
-# commit of its latest driver CORRECTNESS record. The automation
-# surfaced a 34-key HISTORICAL BACKLOG the r5-r10 hand-curated heads
-# missed, almost all via shared helpers outside the operator modules:
-# streaming/core.py's replay_dir (r7 cache-fingerprint change) left 14
-# r4/r5-recorded streaming keys stale, sources/derived.py the same for
-# 6 scan keys, layout.py path helpers for 4 layout keys, plus 10
-# same-module edits (tpch_q18's r5 single-fact-pass rewrite, joins.py's
-# _click_struct_type, win_distribution/win_ranking, dim_scd2,
-# sample_per_group, agg_bitmap_distinct, scan_parquet_evolve, and the
-# _hourly_grid-coupled ts_*_stl pair). Those 34 + the 11 keys edited in
-# r10-after-snapshot/r11 (dedup df-cap trio, drift discrete-edge pair
-# + equidepth, the graph _pin/_fresh_pins trio — degree_stats flagged
-# by the ratchet itself mid-round — embed_centroid_outliers comment,
-# stream_stateful _ss_* split: the r10 verdict's one missed key), the
-# 5 rows-only keys whose NULL-text/degenerate-KMeans crashes the r11
-# rows-only sweep found and fixed, and win_rolling_regression (the
-# full-matrix sweep's calendar-edge BIGINT-overflow fix) = 51 flagged
-# keys against 50 slots; embed_pq was the one EXPLICIT r11 DEFERRAL
-# and duly heads the r12 window below, which also burns the whole
-# r3/r4 staleness cohort (the r11 verdict's top item) so that after
-# the r12 record lands, no driver record is older than r5 and the
-# DEFERRED ledger is empty.
-# tests/test_window_selection.py asserts flagged ⊆ window ∪ DEFERRED
-# with deferrals legal only under slot pressure, so a missed key now
-# fails pytest structurally instead of relying on curation.
-_ROWS_ONLY = {
-    "pack_sequences_ffd",
-    "embed_pq",
-    "ann_ivf_pq",
-    "ann_ivf",
-    "dedup_minhash",
-    "dedup_simhash",
-    "sim_ann_lsh",
-    "profile_table_approx",
-}
-_WINDOW = [
-    # r13 window, REV 7 (`window_select.py --propose` at round close,
-    # after every r13 optimization edit landed). Head = the 49 keys
-    # whose code moved after their latest driver record: the full REV 6
-    # deferral-burn cohort (graph_degree_stats, the checkpoint/replay
-    # streaming keys, the scan-glob keys, the comment-only keys,
-    # ann_ivf — all of whose closures ALSO transited this round's
-    # streaming-core checkpoint/state-partition work) plus this round's
-    # own operator edits: graph_triangle_count/graph_pagerank (adjacency
-    # rewrite / pinned per-node frame), dedup_cluster (scale-adaptive
-    # contraction shuffles), embed_pca_power (single-kernel sweeps),
-    # stream_cdc_apply/stream_hll_distinct (2-batch replay),
-    # stream_funnel/stream_stateful/stream_custom_state/
-    # stream_rollup_upsert (state partitions), and the _pin/_spread
-    # dedup+multimodal family (dedup_minhash/simhash/ngram_jaccard/
-    # containment/repeated_substrings, multimodal_phash,
-    # pipeline_media_prep) and embed_matryoshka_eval's _spread_vecs.
-    # Tail = the stalest record (topn_per_group), keeping the
-    # staleness rotation moving. DEFERRED stays EMPTY — nothing edited
-    # this round is outside this window.
-    "ann_ivf",
-    "basket_lift",
-    "contamination_ngram",
-    "dedup_cluster",
-    "dedup_containment",
-    "dedup_minhash",
-    "dedup_ngram_jaccard",
-    "dedup_repeated_substrings",
-    "dedup_simhash",
-    "embed_matryoshka_eval",
-    "embed_pca_power",
-    "event_cooccurrence",
-    "graph_degree_stats",
-    "graph_pagerank",
-    "graph_triangle_count",
-    "join_stream_static",
-    "join_stream_stream",
-    "join_stream_stream_outer",
-    "multimodal_phash",
-    "pipeline_media_prep",
-    "scan_csv",
-    "scan_json",
-    "scan_text",
-    "sink_foreach_batch",
-    "sink_memory",
-    "sink_parquet",
-    "sink_webhook",
-    "source_file_stream",
-    "source_rate",
-    "source_webhook",
-    "stream_anomaly",
-    "stream_cdc_apply",
-    "stream_custom_state",
-    "stream_dedup",
-    "stream_funnel",
-    "stream_hll_distinct",
-    "stream_late_drops",
-    "stream_output_modes",
-    "stream_quantile",
-    "stream_rollup_upsert",
-    "stream_session_agg",
-    "stream_sliding_agg",
-    "stream_stateful",
-    "stream_topk",
-    "stream_triggers",
-    "stream_tumbling_agg",
-    "stream_watermark",
-    "ts_anomaly_stl",
-    "ts_stl_decompose",
-    "topn_per_group",
-]
 
 _MODULES = [
     "data_webhooks_spark.operators.windows",
@@ -172,15 +54,7 @@ def _collect() -> tuple[dict, dict]:
             if k not in mod.QUERIES:
                 raise ValueError(f"oracle without query: {k!r} in {modname}")
             oracle[k] = v
-    missing = [k for k in _WINDOW if k not in queries]
-    if missing:
-        raise ValueError(f"window keys not registered: {missing}")
-    unoracled = [k for k in _WINDOW if k not in oracle and k not in _ROWS_ONLY]
-    if unoracled:
-        raise ValueError(f"window keys without SQL oracle: {unoracled}")
-    ordered = {k: queries[k] for k in _WINDOW}
-    ordered.update((k, v) for k, v in queries.items() if k not in ordered)
-    return ordered, oracle
+    return queries, oracle
 
 
 _QUERIES: dict | None = None

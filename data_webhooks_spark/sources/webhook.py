@@ -27,6 +27,11 @@ digest, so replayed-but-modified payloads are rejected too).
 Comparison is constant-time (hmac.compare_digest). With no secret
 configured the endpoint stays open — the test/dev default.
 
+Malformed requests — a Content-Length that is not a non-negative
+integer, or a body that is not UTF-8 — get 400 and never reach the
+buffer; a bad Content-Length also closes the connection, since the
+body boundary is unknown.
+
 Scale notes: a single-driver HTTP ingest is the reference shape
 (webhook receiver). At 100 TB/day you would front this with a durable
 log and use many partition-readers; the DataSource abstraction is the
@@ -153,24 +158,37 @@ class WebhookStreamReader(SimpleDataSourceStreamReader):
             # keep-alive response ~40ms — 1000 posts took 47s.
             disable_nagle_algorithm = True
 
+            def _empty(self, status: int, close: bool = False) -> None:
+                self.send_response(status)
+                if close:  # also sets self.close_connection
+                    self.send_header("Connection", "close")
+                self.send_header("Content-Length", "0")
+                self.end_headers()
+
             def do_POST(self):  # noqa: N802 (http.server API)
-                length = int(self.headers.get("Content-Length", 0))
-                raw = self.rfile.read(length)
+                length = self.headers.get("Content-Length", "0")
+                if not (length.isascii() and length.isdigit()):
+                    # no trustworthy body boundary: answer and drop the
+                    # connection instead of guessing (read(-1) would
+                    # block until the client hangs up)
+                    self._empty(400, close=True)
+                    return
+                raw = self.rfile.read(int(length))
                 if reader.secret is not None and not signature_valid(
                     reader.secret, raw, self.headers.get(SIGNATURE_HEADER)
                 ):
                     # reject BEFORE the buffer: an unsigned/tampered
                     # payload must never get an offset
-                    self.send_response(401)
-                    self.send_header("Content-Length", "0")
-                    self.end_headers()
+                    self._empty(401)
                     return
-                body = raw.decode("utf-8")
+                try:
+                    body = raw.decode("utf-8")
+                except UnicodeDecodeError:
+                    self._empty(400)
+                    return
                 off = reader.buffer.append(body, reader.max_buffer)
                 if off is None:
-                    self.send_response(429)  # buffer full — retry later
-                    self.send_header("Content-Length", "0")
-                    self.end_headers()
+                    self._empty(429)  # buffer full — retry later
                     return
                 payload = json.dumps({"offset": off}).encode()
                 self.send_response(200)

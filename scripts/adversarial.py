@@ -1,6 +1,8 @@
-"""Round-9 adversarial-input discovery sweep (r8 verdict item 7).
+"""Adversarial-input scenarios: mutated clones of the sf0.001 fixtures.
 
-Extends the r8 single-NULL-column injection to two harder shapes:
+Each scenario in SCENARIOS maps table names to a pandas mutator;
+``_clone`` symlinks every untouched table and rewrites the mutated
+ones, giving a fixture dir both Spark and DuckDB read. The shapes:
 
 A. MULTI-NULL ROWS — one injected row whose every realistic nullable
    column is NULL at once (events: user_id+event_type+value+props;
@@ -14,29 +16,21 @@ B. NULL-ONLY GROUPS — a group key that still exists but whose every
    percentile/histogram arms skip it) and rolling series must not
    shift frames asymmetrically.
 
-Runs EVERY SQL-oracled key against each mutated clone of sf0.001 and
-prints one line per divergence/error; zero output rows = clean sweep.
-Usage: python scripts/null_sweep_r9.py [A|B] (default: both)
+C-N are documented on their mutators below. KNOWN_BOUNDARY,
+ORACLE_PINNED and EXPECT_LOUD list the per-scenario keys whose
+comparison is skipped or whose contract is to raise.
+tests/test_adversarial_sweeps.py runs every scenario over every key.
 """
 
 from __future__ import annotations
 
-import json
 import os
-import sys
-import tempfile
-import traceback
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 
-import pandas as pd  # noqa: E402
-import pyarrow as pa  # noqa: E402
-import pyarrow.parquet as pq  # noqa: E402
-
-from data_webhooks_spark import registry  # noqa: E402
-from data_webhooks_spark.oracle import compare_frames, duck_connect  # noqa: E402
-from data_webhooks_spark.schemas import TABLE_NAMES  # noqa: E402
-from data_webhooks_spark.session import get_spark  # noqa: E402
+from data_webhooks_spark.schemas import TABLE_NAMES
 
 BASE = "/root/testdata/sf0.001"
 
@@ -413,68 +407,3 @@ EXPECT_LOUD = {
     },
 }
 
-
-def main() -> None:
-    which = sys.argv[1:] or list(SCENARIOS)
-    spark = get_spark("dws-null-sweep-r9")
-    qs, osql = registry.queries(), registry.oracle_sql()
-    findings: dict = {}
-    for sc in which:
-        tmp = tempfile.mkdtemp(prefix=f"nullsweep_{sc}_")
-        sf = _clone(tmp, SCENARIOS[sc])
-        print(f"== scenario {sc} at {sf} ==", flush=True)
-        loud = EXPECT_LOUD.get(sc, set())
-        boundary = KNOWN_BOUNDARY.get(sc, set())
-        for k in sorted(osql):
-            if k in boundary:
-                continue
-            if k in loud:
-                try:
-                    qs[k](spark, sf).toPandas()
-                    findings[f"{sc}:{k}"] = (
-                        "SILENT: expected the documented loud contract to raise"
-                    )
-                    print(f"SILENT {sc} {k}: expected raise", flush=True)
-                except Exception:  # noqa: BLE001
-                    pass  # loud by contract — correct
-                continue
-            if k in ORACLE_PINNED:
-                continue
-            try:
-                sp = qs[k](spark, sf).toPandas()
-                con = duck_connect(sf)
-                try:
-                    du = con.execute(osql[k]).df()
-                finally:
-                    con.close()
-                probs = compare_frames(sp, du)
-                if probs:
-                    findings[f"{sc}:{k}"] = str(probs)
-                    print(f"DIVERGE {sc} {k}: {probs}", flush=True)
-            except Exception as e:  # noqa: BLE001
-                findings[f"{sc}:{k}"] = f"ERROR {type(e).__name__}: {e}"
-                print(f"ERROR {sc} {k}: {type(e).__name__}: {e}", flush=True)
-                traceback.print_exc()
-        # Rows-only keys (no oracle => no parity to compare) must
-        # still EXECUTE on every mutated clone: the crash class the
-        # r10 clone storm exposed in oracled keys (ANSI throw where
-        # the intended behavior is a silent drop) is just as possible
-        # in the approximate/ML paths, and without this loop it was
-        # invisible (r11 gap-closure).
-        for k in sorted(set(qs) - set(osql)):
-            if k in loud or k in boundary:
-                continue
-            try:
-                qs[k](spark, sf).count()
-            except Exception as e:  # noqa: BLE001
-                findings[f"{sc}:{k}"] = f"ROWS-ONLY ERROR {type(e).__name__}: {e}"
-                print(f"ERROR {sc} {k}: {type(e).__name__}: {e}", flush=True)
-                traceback.print_exc()
-    out = "/root/repo/.runtime/null_sweep_r9.json"
-    with open(out, "w") as f:
-        json.dump(findings, f, indent=1, sort_keys=True)
-    print(f"done: {len(findings)} findings -> {out}", flush=True)
-
-
-if __name__ == "__main__":
-    main()

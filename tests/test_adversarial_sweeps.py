@@ -1,35 +1,20 @@
-"""Permanent adversarial-input sweeps (r9 verdict item 5): the eleven
-scenario mutations from scripts/null_sweep_r9.py — multi-NULL rows,
-NULL-only groups, multibyte text, NULL-only langs, degenerate texts,
-duplicate timestamps, negative values, temporal extremes, the clone
-storm, the r11 boilerplate storm, and the r12 empty-facts scenario —
-promoted from an out-of-band script into the suite, so a future
-operator edit that regresses any scenario fails `pytest tests/`.
+"""Adversarial-input sweeps: every scenario in scripts/adversarial.py
+(multi-NULL rows, NULL-only groups, multibyte text, NULL-only langs,
+degenerate texts, duplicate timestamps, negative values, temporal
+extremes, the clone storm, the boilerplate storm, empty facts, the
+single-key firehose, the hot fact key and non-finite values) runs over
+every registered key. Oracled keys must match DuckDB on the mutated
+clone, rows-only keys must execute, and EXPECT_LOUD keys must raise.
 
-BUDGET GATE: the full matrix (10 scenarios x 279 oracled keys) is an
-out-of-band discovery run (python scripts/null_sweep_r9.py). In the
-suite each scenario runs over the keys edited in the CURRENT round
-(scripts/window_select.changed_since_last_snapshot — computed from
-git, not curated): the sweep gate's job is catching regressions in
-fresh edits, while unedited keys are covered by the recorded
-full-matrix discovery runs — scenarios A–H over all keys in r9,
-scenario I (clone storm) full-matrix in r10, scenario J (boilerplate
-storm) full-matrix in r11, scenario K (empty facts) full-matrix in
-r12 (4 findings — three KMeans-on-empty crashes and the kll __all__
-row — all fixed, re-run 0 findings), each 0 findings after fixes. A NEW
-scenario must get its own full-matrix run before relying on this
-gate. Set SPARK_GRAFT_SWEEP_KEYS=k1,k2 to override, or
-SPARK_GRAFT_SWEEP_ALL=1 for the full matrix (slow).
+The full matrix is slow (builder tier, see pytest.ini); narrow a run
+with `pytest -k`, e.g. `-k "A-agg_groupby"` or `-k "K-"`.
 """
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 import pytest
 
-from scripts.null_sweep_r9 import (
+from scripts.adversarial import (
     EXPECT_LOUD,
     KNOWN_BOUNDARY,
     ORACLE_PINNED,
@@ -40,68 +25,19 @@ from scripts.null_sweep_r9 import (
 from data_webhooks_spark import registry
 from data_webhooks_spark.oracle import compare_frames, duck_connect
 
-# Builder tier (r12 verdict item 2): the scenario x edited-key matrix
-# scales with the round's edit breadth (~600 tests / ~25 min in r13)
-# and blew the driver's pytest budget. The default run skips it; the
-# round-close full-suite run (`pytest -m ""`) and the out-of-band
-# full-matrix discovery runs keep the coverage. See pytest.ini.
+# Builder tier: the scenario x key matrix is far over the default
+# run's budget. See pytest.ini.
 pytestmark = pytest.mark.slowtier
 
 
-def _gated_keys() -> list[str]:
-    # rows-only keys are included: they cannot diverge (no oracle) but
-    # they CAN crash — the r11 rows-only sweep found four kernel
-    # crashes (NULL-text minhash/simhash/ffd, degenerate-KMeans PQ
-    # codebooks) that the oracled-only gate was blind to. The test
-    # body executes them instead of comparing.
-    qs = registry.queries()
-    if os.environ.get("SPARK_GRAFT_SWEEP_ALL"):
-        return sorted(qs)
-    env = os.environ.get("SPARK_GRAFT_SWEEP_KEYS")
-    if env:
-        return [k for k in env.split(",") if k in qs]
-    from scripts.window_select import (
-        changed_since_last_snapshot,
-        flagged_keys,
-    )
-
-    keys = sorted(changed_since_last_snapshot())
-    if not keys:
-        # Fresh snapshot, nothing edited yet. Fall back to the keys
-        # whose code moved after their own record (the window head) —
-        # NOT a hardcoded slice — and say so loudly: a silent green
-        # here previously masked the gate running in degraded mode
-        # (r11 ADVICE finding).
-        keys = sorted(flagged_keys())[:10]
-        if keys:
-            import warnings
-
-            warnings.warn(
-                "adversarial sweep gate: no current-round edits "
-                f"detected; degraded fallback over {len(keys)} "
-                "changed-after-record keys",
-                stacklevel=2,
-            )
-    if not keys:  # truly quiescent tree: smoke the 10 oldest records
-        from scripts.record_age import load_records
-
-        recs = load_records()
-        keys = [
-            k
-            for _, k in sorted((r, k) for k, (r, _) in recs.items())
-            if k in qs
-        ][:10]
-    return keys
-
-
 @pytest.fixture(scope="module", params=sorted(SCENARIOS))
-def scenario_dir(request):
+def scenario_dir(request, tmp_path_factory):
     """One mutated sf0.001 clone per scenario, shared by its keys."""
-    tmp = tempfile.mkdtemp(prefix=f"sweep_{request.param}_")
-    return request.param, _clone(tmp, SCENARIOS[request.param])
+    tmp = tmp_path_factory.mktemp(f"sweep_{request.param}_")
+    return request.param, _clone(str(tmp), SCENARIOS[request.param])
 
 
-@pytest.mark.parametrize("key", _gated_keys())
+@pytest.mark.parametrize("key", sorted(registry.queries()))
 def test_adversarial_scenarios(spark, scenario_dir, key):
     sc, sf = scenario_dir
     if key in KNOWN_BOUNDARY.get(sc, set()):

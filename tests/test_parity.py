@@ -1,4 +1,4 @@
-"""The local twin of the driver's correctness gate.
+"""Oracle parity: the engine's correctness gate.
 
 For every operator key with a SQL oracle: run the PySpark DataFrame and
 the DuckDB SQL at sf0.01 and require an exact order-insensitive match
@@ -47,26 +47,27 @@ def test_oracle_not_vacuous(key, duck):
     )
 
 
-def test_driver_window_is_the_round12_rotation():
-    """The external driver's correctness gate reads the FIRST 50 keys
-    of queries(). Since r11 the window HEAD is computed, not curated:
-    scripts/window_select.py flags every key whose implementing
-    closure changed after its latest CORRECTNESS snapshot, and
-    tests/test_window_selection.py pins flagged ⊆ window, head-first
-    ordering, and registry↔proposal agreement. This test keeps the
-    structural invariants: 50 unique keys, queries() leads with
-    exactly _WINDOW, every non-rows-only window key SQL-oracled, and
-    the rows-only set is precisely the unoracled remainder."""
-    from data_webhooks_spark.registry import _ROWS_ONLY, _WINDOW
+# Keys with no SQL oracle: approximate/ML outputs that
+# test_rows_only_runs only executes. A key that loses its oracle joins
+# the unoracled remainder and fails test_registry_invariants.
+EXPECTED_ROWS_ONLY = {
+    "pack_sequences_ffd",
+    "embed_pq",
+    "ann_ivf_pq",
+    "ann_ivf",
+    "dedup_minhash",
+    "dedup_simhash",
+    "sim_ann_lsh",
+    "profile_table_approx",
+}
 
-    qs, osql = registry.queries(), registry.oracle_sql()
-    first50 = list(qs)[:50]
-    assert len(_WINDOW) == 50
-    assert len(set(_WINDOW)) == 50
-    assert first50 == _WINDOW
-    assert all(k in osql for k in first50 if k not in _ROWS_ONLY)
-    assert _ROWS_ONLY == set(qs) - set(osql)
-    assert len(set(qs)) == len(qs)
+
+def test_registry_invariants():
+    """287 keys (the registry rejects duplicates), 279 SQL-oracled,
+    and the unoracled remainder is exactly the known rows-only set."""
+    assert len(QUERIES) == 287
+    assert len(ORACLE) == 279
+    assert set(QUERIES) - set(ORACLE) == EXPECTED_ROWS_ONLY
 
 
 PORTABLE_ORACLES = frozenset({

@@ -14,7 +14,7 @@ Pinned here: (a) the cap NEVER BINDS at the fixtures (hot set empty →
 pure-boilerplate corpus produces ZERO candidate pairs capped vs
 C(n,2)-scale uncapped (the bounded-cost property), and (c) full
 oracle parity on the scenario-J boilerplate storm for all three
-consumers (the sweep also runs J across the window head).
+consumers (the slowtier sweep also runs J over every key).
 """
 
 from __future__ import annotations
@@ -22,7 +22,7 @@ from __future__ import annotations
 import pandas as pd
 import pytest
 
-from scripts.null_sweep_r9 import SCENARIOS, _clone
+from scripts.adversarial import SCENARIOS, _clone
 
 from data_webhooks_spark import registry
 from data_webhooks_spark.operators.dedup import _DF_CAP, _df_capped, _shingled

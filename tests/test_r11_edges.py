@@ -25,7 +25,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from scripts.null_sweep_r9 import _clone
+from scripts.adversarial import _clone
 
 from data_webhooks_spark import registry
 from data_webhooks_spark.oracle import compare_frames, duck_connect

@@ -97,6 +97,44 @@ def test_webhook_hmac_signature_validation():
     reader.stop()
 
 
+def test_webhook_rejects_malformed_posts_with_400():
+    """A non-integer Content-Length, a negative one, and a non-UTF-8
+    body each get 400 with no offset, the buffer head does not move,
+    and the next valid POST is still accepted with 200."""
+    import http.client
+    import socket
+
+    from data_webhooks_spark.sources.webhook import (
+        WebhookStreamReader,
+        free_port,
+        post_events,
+    )
+
+    port = free_port()
+    reader = WebhookStreamReader({"port": str(port)})
+    assert reader.initialOffset() == {"offset": 0}  # binds the server
+    assert post_events(port, ['{"a":1}']) == 1
+    head = reader.buffer.head
+
+    for length, body in [(b"abc", b'{"a":2}'), (b"-1", b'{"a":3}'), (b"2", b"\xff\xfe")]:
+        with socket.create_connection(("127.0.0.1", port), timeout=10) as s:
+            s.sendall(
+                b"POST / HTTP/1.1\r\nHost: localhost\r\nContent-Length: "
+                + length + b"\r\n\r\n" + body
+            )
+            resp = http.client.HTTPResponse(s)
+            resp.begin()
+            assert resp.status == 400, length
+            assert resp.read() == b""  # no offset
+        assert reader.buffer.head == head
+
+    assert post_events(port, ['{"a":4}']) == 1
+    rows, end = reader.read({"offset": 0})
+    assert end == {"offset": 2}
+    assert list(rows) == [(0, '{"a":1}'), (1, '{"a":4}')]
+    reader.stop()
+
+
 def test_webhook_backpressure_and_buffer():
     from data_webhooks_spark.sources.webhook import _Buffer
 
