@@ -640,7 +640,7 @@ def agg_kll_quantile(spark, sf_dir):
         F.kll_sketch_get_quantile_double(
             F.aggregate(
                 F.slice("sks", 2, 100),
-                F.element_at("sks", 1),
+                F.try_element_at("sks", F.lit(1)),
                 lambda acc, x: F.kll_sketch_merge_double(acc, x),
             ),
             F.lit(0.5),

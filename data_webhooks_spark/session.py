@@ -18,12 +18,32 @@ shuffle-partition coalescing, skew-join splitting, and
 broadcast-demotion all come from it. ``shuffle.partitions`` here is a
 small-SF default; on a real cluster it should be ~2-3x total cores and
 AQE coalesces down.
+
+Checkpoint I/O (``get_spark`` only): Spark's streaming offset and commit
+logs, state stores and file-sink metadata logs write through a Hadoop
+``FileContext``. pip PySpark ships no libhadoop, so the stock ``file:``
+FileContext forks ``chmod``/``ls``/``readlink`` about ten times per
+checkpoint file. ``get_spark`` compiles ``jvm/NioLocalFs.java`` (same
+files, modes and ``.crc`` sidecars, no forks), puts it on the driver
+classpath and makes it the ``file:`` FileContext. ``fs.file.impl`` (parquet
+I/O) stays stock. Without ``javac``, or when this process's JVM already
+runs without the classes, the stock FileContext stays and one warning is
+logged; ``tune`` cannot change a running JVM's classpath.
 """
 
 from __future__ import annotations
 
+import functools
+import glob
+import hashlib
+import logging
 import os
+import shutil
+import subprocess
+import tempfile
 
+from py4j.protocol import Py4JJavaError
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 # Runtime-settable on an existing session.
@@ -71,11 +91,81 @@ def tune(spark: SparkSession) -> SparkSession:
     return spark
 
 
+LOCAL_FS_SOURCE = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm", "NioLocalFs.java")
+LOCAL_FS_CLASS = "data_webhooks_spark.jvm.NioLocalFs"
+
+
+@functools.cache
+def _warn_stock_local_fs(why: str) -> None:
+    logging.getLogger(__name__).warning(
+        "checkpoint I/O keeps the stock file: FileContext (%s); it forks ~10 processes per checkpoint file", why
+    )
+
+
+@functools.cache
+def _local_fs_classes() -> str | None:
+    """Class directory of LOCAL_FS_SOURCE, compiled once per fingerprint of
+    the source and the Hadoop API jar the session's JVM will load (that of
+    the Spark home pyspark launches: $SPARK_HOME, else the pip bundle);
+    None without javac."""
+    from pyspark.find_spark_home import _find_spark_home
+
+    from .io import cached_derivation, commit_derivation, source_fingerprint
+    from .streaming.core import RUNTIME_DIR
+
+    javac = shutil.which("javac")
+    api = glob.glob(os.path.join(_find_spark_home(), "jars", "hadoop-client-api-*.jar"))
+    if javac is None or len(api) != 1:
+        _warn_stock_local_fs("no javac" if javac is None else "no single hadoop-client-api jar")
+        return None
+    with open(LOCAL_FS_SOURCE, "rb") as f:
+        fingerprint = f"{hashlib.sha256(f.read()).hexdigest()};{source_fingerprint(api[0])}"
+    out = f"{RUNTIME_DIR}/jvm/{hashlib.sha256(fingerprint.encode()).hexdigest()[:16]}"
+    if cached_derivation(out, ".complete", fingerprint):
+        return out
+    os.makedirs(os.path.dirname(out), exist_ok=True)
+    tmp = tempfile.mkdtemp(dir=os.path.dirname(out))
+    try:
+        # --release 17: Spark 4's minimum JVM, whatever JDK javac comes from
+        subprocess.run(
+            [javac, "--release", "17", "-cp", api[0], "-d", tmp, LOCAL_FS_SOURCE],
+            check=True,
+            capture_output=True,
+        )
+    except subprocess.CalledProcessError as e:
+        shutil.rmtree(tmp, ignore_errors=True)
+        _warn_stock_local_fs(f"javac failed: {e.stderr.decode(errors='replace').strip()}")
+        return None
+    commit_derivation(tmp, ".complete", fingerprint)
+    try:
+        os.rename(tmp, out)
+    except OSError:  # a concurrent build renamed its copy into place first
+        shutil.rmtree(tmp, ignore_errors=True)
+    return out
+
+
+def _local_fs_confs() -> dict[str, str]:
+    """The classpath entry and the FileContext conf, always as a pair."""
+    classes = _local_fs_classes()
+    if classes is None:
+        return {}
+    if SparkContext._jvm is not None:  # the JVM outlives stop(): its classpath is fixed
+        try:
+            SparkContext._jvm.java.lang.Class.forName(LOCAL_FS_CLASS)
+        except Py4JJavaError:
+            _warn_stock_local_fs("this process's JVM started without it")
+            return {}
+    return {
+        "spark.driver.extraClassPath": classes,
+        "spark.hadoop.fs.AbstractFileSystem.file.impl": LOCAL_FS_CLASS,
+    }
+
+
 def get_spark(app_name: str = "data-webhooks-spark") -> SparkSession:
     """Build (or reuse) a local session with the full config set."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     builder = SparkSession.builder.appName(app_name).master(f"local[{cpus}]")
-    for k, v in {**BUILD_CONFS, **RUNTIME_CONFS}.items():
+    for k, v in {**BUILD_CONFS, **_local_fs_confs(), **RUNTIME_CONFS}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     return tune(spark)

@@ -27,10 +27,12 @@ digest, so replayed-but-modified payloads are rejected too).
 Comparison is constant-time (hmac.compare_digest). With no secret
 configured the endpoint stays open — the test/dev default.
 
-Malformed requests — a Content-Length that is not a non-negative
-integer, or a body that is not UTF-8 — get 400 and never reach the
-buffer; a bad Content-Length also closes the connection, since the
-body boundary is unknown.
+Malformed requests never reach the buffer: a POST without a
+Content-Length, or with any Transfer-Encoding, gets 411; a
+Content-Length that is not a non-negative integer, or a body that is
+not UTF-8, gets 400; a Content-Length above ``MAX_BODY_BYTES`` gets
+413 before any read. All but the UTF-8 case also close the connection,
+since the body boundary is unknown or the body stays unread.
 
 Scale notes: a single-driver HTTP ingest is the reference shape
 (webhook receiver). At 100 TB/day you would front this with a durable
@@ -55,6 +57,9 @@ from pyspark.sql.datasource import (
 WEBHOOK_SCHEMA = "offset bigint, body string"
 
 SIGNATURE_HEADER = "X-Hub-Signature-256"
+
+# Largest accepted body (413 above it); webhook events are ~200 B.
+MAX_BODY_BYTES = 1 << 20
 
 
 def sign_body(secret: str, body: bytes) -> str:
@@ -166,12 +171,21 @@ class WebhookStreamReader(SimpleDataSourceStreamReader):
                 self.end_headers()
 
             def do_POST(self):  # noqa: N802 (http.server API)
-                length = self.headers.get("Content-Length", "0")
+                length = self.headers.get("Content-Length")
+                if length is None or "Transfer-Encoding" in self.headers:
+                    # only length-delimited bodies: reading none here
+                    # would ACK an empty body and parse a chunked one
+                    # as the next request
+                    self._empty(411, close=True)
+                    return
                 if not (length.isascii() and length.isdigit()):
                     # no trustworthy body boundary: answer and drop the
                     # connection instead of guessing (read(-1) would
                     # block until the client hangs up)
                     self._empty(400, close=True)
+                    return
+                if int(length) > MAX_BODY_BYTES:
+                    self._empty(413, close=True)
                     return
                 raw = self.rfile.read(int(length))
                 if reader.secret is not None and not signature_valid(

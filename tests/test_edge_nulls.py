@@ -567,6 +567,21 @@ def test_median_decimal_tie_parity(spark, tmp_path):
     assert got in (52724.24, 52724.25)
 
 
+def test_kll_quantile_empty_lineitem_parity(spark, tmp_path):
+    """Empty facts: the merged-global sketch folds collect_list of the
+    per-flag sketches, which is []; element_at([], 1) raised
+    INVALID_ARRAY_INDEX_IN_ELEMENT_AT under ANSI whenever the projection
+    was evaluated (AQE timing decided), try_element_at gives NULL."""
+    sf = _clone_sf_mutate(tmp_path, {"lineitem": lambda pdf: pdf.iloc[:0]})
+    sp = queries()["agg_kll_quantile"](spark, sf).toPandas()
+    con = duck_connect(sf)
+    try:
+        du = con.execute(oracle_sql()["agg_kll_quantile"]).df()
+    finally:
+        con.close()
+    assert not compare_frames(sp, du), "agg_kll_quantile diverges on empty lineitem"
+
+
 def test_empty_embeddings_pair_mining(spark, tmp_path):
     """No anchors -> empty pair table with the declared schema (the
     numpy kernel used to IndexError sizing itself from a 0-row

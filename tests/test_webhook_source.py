@@ -98,13 +98,18 @@ def test_webhook_hmac_signature_validation():
 
 
 def test_webhook_rejects_malformed_posts_with_400():
-    """A non-integer Content-Length, a negative one, and a non-UTF-8
-    body each get 400 with no offset, the buffer head does not move,
-    and the next valid POST is still accepted with 200."""
+    """Each malformed POST, given as (raw header block after the request
+    line, bytes sent after it, expected status), is refused with no
+    offset and leaves the buffer head where it was: a non-integer or
+    negative Content-Length and a non-UTF-8 body get 400; no
+    Content-Length, or any Transfer-Encoding, gets 411; a Content-Length
+    above MAX_BODY_BYTES gets 413 before any read. All but the UTF-8
+    case close the connection. The next valid POST still gets 200."""
     import http.client
     import socket
 
     from data_webhooks_spark.sources.webhook import (
+        MAX_BODY_BYTES,
         WebhookStreamReader,
         free_port,
         post_events,
@@ -116,16 +121,26 @@ def test_webhook_rejects_malformed_posts_with_400():
     assert post_events(port, ['{"a":1}']) == 1
     head = reader.buffer.head
 
-    for length, body in [(b"abc", b'{"a":2}'), (b"-1", b'{"a":3}'), (b"2", b"\xff\xfe")]:
+    chunked = b'7\r\n{"a":5}\r\n0\r\n\r\n'
+    cases = [
+        (b"Content-Length: abc\r\n", b'{"a":2}', 400),
+        (b"Content-Length: -1\r\n", b'{"a":3}', 400),
+        (b"Content-Length: 2\r\n", b"\xff\xfe", 400),
+        (b"", b"", 411),
+        (b"Transfer-Encoding: chunked\r\n", chunked, 411),
+        (b"Content-Length: 16\r\nTransfer-Encoding: chunked\r\n", chunked, 411),
+        (b"Content-Length: %d\r\n" % (MAX_BODY_BYTES + 1), b"", 413),
+    ]
+    for headers, body, status in cases:
         with socket.create_connection(("127.0.0.1", port), timeout=10) as s:
-            s.sendall(
-                b"POST / HTTP/1.1\r\nHost: localhost\r\nContent-Length: "
-                + length + b"\r\n\r\n" + body
-            )
+            s.sendall(b"POST / HTTP/1.1\r\nHost: localhost\r\n" + headers + b"\r\n" + body)
             resp = http.client.HTTPResponse(s)
             resp.begin()
-            assert resp.status == 400, length
+            assert resp.status == status, headers
             assert resp.read() == b""  # no offset
+            # only the non-UTF-8 body had a known length and was read
+            closes = body != b"\xff\xfe"
+            assert resp.getheader("Connection") == ("close" if closes else None), headers
         assert reader.buffer.head == head
 
     assert post_events(port, ['{"a":4}']) == 1
