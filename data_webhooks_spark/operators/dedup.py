@@ -18,62 +18,12 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..io import Tables
-from ..regutil import registrar
+from ..regutil import pin, registrar, spread
+from ..session import shuffle_partitions
 
 QUERIES: dict = {}
 ORACLE: dict = {}
 op = registrar(QUERIES, ORACLE)
-
-
-# Pin lifecycle (r12 ADVICE): the r12 persist() pins in this module
-# (shingle frames, minhash sig, simhash fingerprint) were never
-# unpersisted, so a long driver session running many keys accumulated
-# data-sized MEMORY_AND_DISK blocks — the same leak class graph.py's
-# _LIVE_PINS tracker was built to prevent. Same discipline here: each
-# pinning op releases the PREVIOUS invocation's pins on entry, so at
-# most one op's pins stay resident. persist stays LAZY (no eager
-# count) — plans, timings and results are byte-unchanged; only the
-# residency window shrinks. Unpersisting a prior result is safe by
-# construction: persist kept the lineage, so a re-collect recomputes.
-_LIVE_PINS: list = []
-
-
-def _pin(df):
-    """persist + track for release at the next pinning op's entry.
-    Keeps persist()'s default storage level — the level the r12 pin
-    measurements were taken at; only the lifecycle is new."""
-    df = df.persist()
-    _LIVE_PINS.append(df)
-    return df
-
-
-def _fresh_pins():
-    """Release pins from prior invocations of this module's ops."""
-    while _LIVE_PINS:
-        try:
-            _LIVE_PINS.pop().unpersist()
-        except Exception:  # session already stopped — nothing to free
-            pass
-
-
-def _spread(df):
-    """Engage the session's full parallelism for a per-row-heavy
-    kernel stage (r13, guide §2.2/§2.4): documents.parquet is a single
-    ~600 KB split at every test SF, so everything upstream of the
-    first Exchange — including multi-second fingerprint/winnowing
-    kernels — otherwise executes as ONE task regardless of core count
-    (the r12 scaling block's 1.1–1.5× at 4× cores is exactly this).
-    Scale-adaptive, not a local[32] constant: the target is the
-    session's defaultParallelism and the repartition fires ONLY when
-    the scan yields fewer splits than that — at real corpus scale the
-    scan has more splits and this is a no-op. Hash-partitioning on
-    doc_id keeps row placement deterministic (round-robin would need
-    its retry-safety sort); the exchanged payload is the sub-MB raw
-    text, paid once before the kernel amortizes it."""
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target, "doc_id")
-    return df
 
 
 def _shingled(docs):
@@ -237,10 +187,9 @@ def dedup_ngram_jaccard(spark, sf_dir):
     — see _df_capped; at the fixture the cap never binds, so values
     equal the uncapped form) — bit-identical across engines."""
     t = Tables(spark, sf_dir)
-    _fresh_pins()  # release the previous dedup op's pins
     # persist experiment (r12): shingled feeds sizes + both self-join
     # sides; the frame is flat (doc_id, shingle string).
-    shingled = _pin(_df_capped(_shingled(t.documents)))
+    shingled = pin(_df_capped(_shingled(t.documents)))
     sizes = shingled.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     a = shingled.alias("a")
     b = shingled.alias("b")
@@ -382,19 +331,18 @@ def dedup_minhash(spark, sf_dir):
     # forbids the duplication, halving the signature pass; the kernel
     # itself is a fixed seeded hash family, so results are unchanged.
     minhash_sig = minhash_sig.asNondeterministic()
-    _fresh_pins()  # release the previous dedup op's pins
-    # _spread NEGATIVE RESULT (r13): spreading the single documents
+    # spread NEGATIVE RESULT (r13): spreading the single documents
     # split before this Arrow kernel measured SLOWER (interleaved
     # best-of-3 noop at sf0.1: 1.5-1.9 s -> 2.2-2.7 s) — the seeded
     # hash family's per-task init plus 32x Arrow batch/python-worker
     # fixed cost exceeds what the ~0.3 s fingerprint pass saves, the
     # guide's §4.3 init-amortization trade inverted. The Catalyst-
     # expression kernels (repeated_substrings, phash, media_prep) keep
-    # _spread, where the same repartition measured 1.2-2.9x FASTER.
+    # spread, where the same repartition measured 1.2-2.9x FASTER.
     sig = t.documents.filter(F.col("text").isNotNull()).select(
         "doc_id", minhash_sig(F.col("text")).alias("sig")
     ).filter(F.col("sig").isNotNull())
-    sig = _pin(sig)
+    sig = pin(sig)
     # Slim band rows (doc_id, band, key) only — carrying the 64-long
     # signature through the 32x band explode would inflate the join
     # shuffle 32x; signatures are re-attached afterwards from the
@@ -496,14 +444,13 @@ def dedup_simhash(spark, sf_dir):
     # r12 plan audit. Pinning the slim (doc_id, simhash) frame runs
     # the Python pass once; same discipline as dedup_minhash's sig
     # pin, recomputed fresh per invocation (never across runs).
-    _fresh_pins()  # release the previous dedup op's pins
-    # _spread NEGATIVE RESULT (r13): same inversion as dedup_minhash —
+    # spread NEGATIVE RESULT (r13): same inversion as dedup_minhash —
     # spreading the split before this Arrow kernel measured 1.3-2.4 s
     # -> 1.9-2.5 s (interleaved best-of-3 noop, sf0.1); per-task
     # python/Arrow fixed cost exceeds the parallelism gain at this
     # row count. Kept single-split; the pin already runs the kernel
     # only once.
-    sh = _pin(
+    sh = pin(
         t.documents.filter(F.col("text").isNotNull()).select(
             "doc_id", simhash64("text").alias("simhash")
         )
@@ -665,23 +612,14 @@ def _connected_components(pairs, max_rounds=30):
     # session's configured parallelism (a 100 TB edge set keeps the
     # cluster's default; the narrowing only kicks in when the counted
     # edge set is provably small), and the prior setting is restored
-    # on exit.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    # after each round.
     _ROWS_PER_PART = 500_000
     n_edges = e.count()
     prev = None
     rounds = 0
-    try:
-        for rounds in range(1, max_rounds + 1):
-            spark.conf.set(
-                "spark.sql.shuffle.partitions",
-                str(
-                    min(
-                        int(prev_parts),
-                        max(4, n_edges // _ROWS_PER_PART + 1),
-                    )
-                ),
-            )
+    for rounds in range(1, max_rounds + 1):
+        narrow = max(4, n_edges // _ROWS_PER_PART + 1)
+        with shuffle_partitions(spark, lambda cur: min(cur, narrow)):
             sym = e.union(
                 e.select(F.col("v").alias("u"), F.col("u").alias("v"))
             )
@@ -719,8 +657,6 @@ def _connected_components(pairs, max_rounds=30):
             if chk == prev:
                 break
             prev = chk
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     labels = e.select(
         F.col("u").alias("doc_id"), F.col("v").alias("cluster_id")
     )
@@ -1100,11 +1036,12 @@ def dedup_repeated_substrings(spark, sf_dir):
     # guard: Spark's sequence(1, n) DESCENDS when n < 1, so a document
     # shorter than the gram length would build garbage positions;
     # DuckDB's range(1, n<=1) is empty — the filter reproduces that.
-    # _spread (r13): the md5 transform + winnowing filter below are
+    # spread (r13): the md5 transform + winnowing filter below are
     # the whole cost of this key (integer/string-exact, so row
     # placement cannot change the result), and they ran as ONE task
     # on the single-split documents scan.
-    base = _spread(t.documents.filter(F.length("text") >= _RS_K)).select(
+    docs = t.documents.filter(F.length("text") >= _RS_K)
+    base = spread(docs, "doc_id").select(
         "doc_id",
         "text",
         F.transform(
@@ -1200,9 +1137,8 @@ def dedup_containment(spark, sf_dir):
     pair (A,B) and (B,A) carry different denominators). Both ratios
     are exact integer divisions, bit-identical across engines."""
     t = Tables(spark, sf_dir)
-    _fresh_pins()  # release the previous dedup op's pins
     # persist (r12): same 3-consumer pin as dedup_ngram_jaccard.
-    shingled = _pin(_df_capped(_shingled(t.documents)))
+    shingled = pin(_df_capped(_shingled(t.documents)))
     sizes = shingled.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     a, b = shingled.alias("a"), shingled.alias("b")
     pairs = (

@@ -29,12 +29,13 @@ driver.
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..io import Tables
 from ..norms import qnt
-from ..regutil import registrar
+from ..regutil import pin, registrar
 
 QUERIES: dict = {}
 ORACLE: dict = {}
@@ -43,57 +44,6 @@ op = registrar(QUERIES, ORACLE)
 _SCALE = 1_000_000_000_000  # rank units per 1.0 of probability mass
 _ITERS = 3
 _D_NUM, _D_DEN = 85, 100  # damping 0.85 as an exact rational
-
-
-def _pin(df):
-    """Materialized MEMORY_AND_DISK persist for a subtree that feeds
-    several consumers (the pagerank edge list feeds every sweep; the
-    triangle `und` feeds four joins). persist(), unlike the
-    localCheckpoint these ops used through r10, KEEPS the lineage:
-    blocks lost to executor failure or memory-pressure eviction are
-    recomputed, where a checkpointed block is gone for good (an
-    executor loss would fail the whole job — the opposite of the
-    cluster-scale rationale these pins exist for), and the
-    ContextCleaner can safely reclaim persisted blocks between keys in
-    a long driver session (r10 advice: checkpoint blocks accumulated
-    until GC). The count() materializes eagerly so every consumer
-    starts from the cached relation instead of racing to fill it.
-
-    Deliberately NOT used by _connected_components / embed_pca_power:
-    their measured pathology is Catalyst RE-ANALYSIS of a
-    multiplicatively self-referencing lineage (a 16-node chain took
-    >280 s persisted vs 3.4 s checkpointed) — lineage TRUNCATION is
-    the point there, and their docstrings pin that trade. The graph
-    ops' lineage is a flat unrolled plan over a persisted base, where
-    analysis cost is linear and persist loses nothing.
-
-    Lifecycle: every pin is tracked in _LIVE_PINS, and each graph op
-    calls _fresh_pins() on entry to unpersist the PREVIOUS
-    invocation's pins — so a long driver session running all 287 keys
-    holds at most one op's pins resident instead of accumulating
-    edge-list caches until GC (the aggregates.py r3 leak class).
-    Unpersisting within an op would be wrong (deg's contrib joins
-    still read edges), and unpersisting a prior result is safe by
-    construction: persist kept the lineage, so a re-collect merely
-    recomputes."""
-    from pyspark import StorageLevel
-
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    df.count()
-    _LIVE_PINS.append(df)
-    return df
-
-
-_LIVE_PINS: list = []
-
-
-def _fresh_pins():
-    """Release pins from prior graph-op invocations (see _pin)."""
-    while _LIVE_PINS:
-        try:
-            _LIVE_PINS.pop().unpersist()
-        except Exception:  # session already stopped — nothing to free
-            pass
 
 
 def _pagerank_oracle() -> str:
@@ -158,27 +108,31 @@ def graph_pagerank(spark, sf_dir):
     with no float rounding budget. The Python loop unrolls 3 sweeps
     declaratively; each sweep is one equi-join (edge list × rank
     table) + one groupBy on the same dst key."""
-    _fresh_pins()  # release the previous graph op's caches
     t = Tables(spark, sf_dir)
     li = t.lineitem.select("l_orderkey", "l_partkey")
     b = li.select(
         F.col("l_orderkey").alias("bok"), F.col("l_partkey").alias("dst")
     )
-    # Materialized persist (_pin): the unrolled 3-sweep plan references
-    # the edge list in every contrib join and the degree table in every
+    # Materialized MEMORY_AND_DISK pins (eager count): the unrolled
+    # 3-sweep plan references the edge list in every contrib join and
+    # the degree table in every
     # rank rebuild — unpinned, Catalyst re-runs the lineitem self-join
     # + distinct ~7x (measured 5-7 s at sf0.1; 4.4 s pinned — the
     # residual is the one honest edge build: a 2.4M-row pair distinct
     # plus 3 join+agg sweeps). At cluster scale the resident edge list
     # is what any power-method implementation keeps between sweeps;
     # persist (not checkpoint) keeps it recomputable on executor loss.
-    edges = _pin(
+    edges = pin(
         li.join(b, li["l_orderkey"] == b["bok"])
         .filter(li["l_partkey"] != b["dst"])
         .select(li["l_partkey"].alias("src"), "dst")
-        .distinct()
+        .distinct(),
+        StorageLevel.MEMORY_AND_DISK, eager=True
     )
-    deg = _pin(edges.groupBy("src").agg(F.count(F.lit(1)).alias("d")))
+    deg = pin(
+        edges.groupBy("src").agg(F.count(F.lit(1)).alias("d")),
+        StorageLevel.MEMORY_AND_DISK, eager=True
+    )
     # 1-row scalars: node count -> uniform start mass + damping base
     scalars = deg.agg(F.count(F.lit(1)).alias("n")).select(
         F.expr(f"{_SCALE} div n").alias("ru0"),
@@ -194,10 +148,11 @@ def graph_pagerank(spark, sf_dir):
     # construction (the scalars are deterministic aggregates of the
     # pinned degree table); interleaved warm A/B 6.3 -> 5.4 s at
     # sf0.1, output hash identical.
-    nd = _pin(
+    nd = pin(
         deg.crossJoin(F.broadcast(scalars)).select(
             F.col("src").alias("node"), "d", "base", "ru0"
-        )
+        ),
+        StorageLevel.MEMORY_AND_DISK, eager=True
     )
     r = nd.select("node", "d", "base", F.col("ru0").alias("ru"))
     for _ in range(_ITERS):
@@ -276,13 +231,12 @@ def graph_triangle_count(spark, sf_dir):
     needed; the DuckDB twin runs the identical orientation. Output is
     the graph profile (nodes, undirected edges, oriented wedges,
     triangles) as one row."""
-    _fresh_pins()  # release the previous graph op's caches
     t = Tables(spark, sf_dir)
     li = t.lineitem.select("l_orderkey", "l_partkey")
     b = li.select(
         F.col("l_orderkey").alias("bok"), F.col("l_partkey").alias("pk2")
     )
-    # Materialized persists (_pin, the graph_pagerank pattern): `und`
+    # Materialized pins (the graph_pagerank pattern): `und`
     # feeds four consumers (deg, oriented, the closing join, n_edges)
     # and `oriented` two — unpinned, Catalyst re-runs the lineitem
     # self-join + distinct (the 4.7 s cold / 2.6 s warm profile term)
@@ -291,33 +245,36 @@ def graph_triangle_count(spark, sf_dir):
     # irreducible term); at cluster scale, not re-running a
     # lineitem-sized self-join 4x is the point, and persist keeps
     # every pin recomputable on executor loss.
-    und = _pin(
+    und = pin(
         li.join(b, li["l_orderkey"] == b["bok"])
         .filter(li["l_partkey"] != b["pk2"])
         .select(
             F.least(li["l_partkey"], b["pk2"]).alias("u"),
             F.greatest(li["l_partkey"], b["pk2"]).alias("v"),
         )
-        .distinct()
+        .distinct(),
+        StorageLevel.MEMORY_AND_DISK, eager=True
     )
-    deg = _pin(
+    deg = pin(
         und.select(F.col("u").alias("node"))
         .unionAll(und.select(F.col("v").alias("node")))
         .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("d"))
+        .agg(F.count(F.lit(1)).alias("d")),
+        StorageLevel.MEMORY_AND_DISK, eager=True
     )
     du = deg.select(F.col("node").alias("u"), F.col("d").alias("du"))
     dv = deg.select(F.col("node").alias("v"), F.col("d").alias("dv"))
     lower_first = (F.col("du") < F.col("dv")) | (
         (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
     )
-    oriented = _pin(
+    oriented = pin(
         und.join(du, "u")
         .join(dv, "v")
         .select(
             F.when(lower_first, F.col("u")).otherwise(F.col("v")).alias("s"),
             F.when(lower_first, F.col("v")).otherwise(F.col("u")).alias("t"),
-        )
+        ),
+        StorageLevel.MEMORY_AND_DISK, eager=True
     )
     # Wedge and triangle counts via per-source ADJACENCY ARRAYS (r13,
     # guide §2.3/§1.2 "make the plan match the cheapest execution"):
@@ -431,7 +388,6 @@ def graph_degree_stats(spark, sf_dir):
     degree — each collapses cardinality by orders of magnitude before
     the next step, and the window pass touches only the final
     ~hundreds of rows."""
-    _fresh_pins()  # no pins of its own; frees a predecessor's
     t = Tables(spark, sf_dir)
     li = t.lineitem.select("l_orderkey", "l_partkey")
     b = li.select(

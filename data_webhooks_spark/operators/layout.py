@@ -32,12 +32,11 @@ from ..io import (
 )
 from ..norms import dec_sum, finite_or_null, o_dec_sum
 from ..regutil import registrar
+from ..streaming.core import RUNTIME_DIR
 
 QUERIES: dict = {}
 ORACLE: dict = {}
 op = registrar(QUERIES, ORACLE)
-
-RUNTIME_DIR = "/root/repo/.runtime"
 
 
 def _sf_name(sf_dir: str) -> str:

@@ -19,52 +19,11 @@ from pyspark.sql import functions as F
 
 from ..io import Tables
 from ..norms import qnt
-from ..regutil import registrar
+from ..regutil import pin, registrar, spread
 
 QUERIES: dict = {}
 ORACLE: dict = {}
 op = registrar(QUERIES, ORACLE)
-
-
-# Pin lifecycle (r12 ADVICE): same tracker as graph.py/dedup.py — the
-# r12 fingerprint pins (multimodal_phash, pipeline_media_prep) were
-# never unpersisted, accumulating resident blocks across a long driver
-# session. Each pinning op releases the previous invocation's pins on
-# entry; persist stays lazy, plans and results byte-unchanged.
-_LIVE_PINS: list = []
-
-
-def _pin(df):
-    """persist + track for release at the next pinning op's entry.
-    Keeps persist()'s default storage level — the level the r12 pin
-    measurements were taken at; only the lifecycle is new."""
-    df = df.persist()
-    _LIVE_PINS.append(df)
-    return df
-
-
-def _fresh_pins():
-    """Release pins from prior invocations of this module's ops."""
-    while _LIVE_PINS:
-        try:
-            _LIVE_PINS.pop().unpersist()
-        except Exception:  # session already stopped — nothing to free
-            pass
-
-
-def _spread(df):
-    """Engage the session's full parallelism for a per-row-heavy
-    kernel stage (r13, guide §2.2/§2.4; same helper as dedup.py):
-    documents.parquet is a single ~600 KB split at every test SF, so
-    the 56-term dHash/checksum projections otherwise execute as ONE
-    task. Scale-adaptive: fires only when the scan yields fewer
-    splits than defaultParallelism (a no-op at real corpus scale);
-    hash-partitioning on doc_id keeps placement deterministic, and
-    every consumer here is integer-exact so results cannot move."""
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target, "doc_id")
-    return df
 
 
 DECODE_SCHEMA = (
@@ -548,11 +507,10 @@ def multimodal_phash(spark, sf_dir):
     # per-row cost — doubling the fingerprint pass. The pinned frame
     # is flat (doc_id, ph BIGINT): none of the nested-array cache
     # penalty that made the dedup_embedding pin a negative result.
-    _fresh_pins()  # release the previous multimodal op's pins
-    # _spread (r13): the 56-term dHash expression ran as one task on
+    # spread (r13): the 56-term dHash expression ran as one task on
     # the single documents split.
-    h = _pin(
-        _spread(t.documents.select("doc_id", "text")).select(
+    h = pin(
+        spread(t.documents.select("doc_id", "text"), "doc_id").select(
             "doc_id",
             F.octet_length("text").cast("long").alias("n"),
             F.hex(F.encode("text", "utf-8")).alias("hx"),
@@ -660,7 +618,6 @@ def pipeline_media_prep(spark, sf_dir):
     stub behind `multimodal_col` swaps to a real thumbnailer and the
     byte sampler reads its output — the plan shape is unchanged."""
     t = Tables(spark, sf_dir)
-    _fresh_pins()  # release the previous multimodal op's pins
     terms = " + ".join(
         tt.replace("{div}", "div") for tt in _phash_terms(_hx_byte_spark)
     )
@@ -671,9 +628,9 @@ def pipeline_media_prep(spark, sf_dir):
     # never left the row. Fusing them removes that exchange outright;
     # the near-dup band probe below still derives its slim
     # (doc_id, ph) side from this same projection.
-    # _spread (r13): metadata+dHash fused projection ran as one task
+    # spread (r13): metadata+dHash fused projection ran as one task
     # on the single documents split.
-    base = _spread(t.documents.select("doc_id", "text")).select(
+    base = spread(t.documents.select("doc_id", "text"), "doc_id").select(
         "doc_id",
         # octet_length (BYTES): n_bytes is payload size, and the
         # oracle's strlen counts bytes — length() counted chars and
@@ -687,7 +644,7 @@ def pipeline_media_prep(spark, sf_dir):
     ).select(
         "doc_id", "n_bytes", "checksum", F.expr(terms).alias("ph")
     )
-    base = _pin(base)
+    base = pin(base)
     h = base.select("doc_id", "ph")
     bands = h.select(
         "doc_id",

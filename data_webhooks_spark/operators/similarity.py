@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 
 from ..io import Tables
 from ..norms import qnt
-from ..regutil import registrar
+from ..regutil import registrar, spread
 
 QUERIES: dict = {}
 ORACLE: dict = {}
@@ -38,23 +38,6 @@ def _norm_df(t):
         e.alias("e"),
         F.sqrt(F.aggregate(e, F.lit(0.0), lambda acc, x: acc + x * x)).alias("nrm"),
     )
-
-
-def _spread_vecs(df):
-    """Engage the session's full parallelism for a per-row-heavy
-    kernel over the embeddings table (r13, guide §2.2/§2.4; the
-    dedup.py _spread pattern): embeddings.parquet is a single ~800 KB
-    split at every test SF, so a flop-dense evaluation stage
-    downstream of the scan otherwise executes as ONE task.
-    Scale-adaptive — fires only when the scan yields fewer splits than
-    defaultParallelism (no-op on a many-split corpus); deterministic
-    hash placement on vec_id. Used ONLY by evaluation ops whose math
-    is row-local + integer-exact ranking (never by the KMeans-backed
-    index builders, whose fits are partition-layout-sensitive)."""
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target, "vec_id")
-    return df
 
 
 def _pad_centroids(cs: list, k: int) -> list:
@@ -1064,9 +1047,9 @@ def embed_matryoshka_eval(spark, sf_dir):
     design, like sim_cosine_brute as recall oracle); the production
     serving path for truncated vectors is ann_ivf/ann_ivf_pq over the
     sliced column. Query side broadcasts; corpus side shuffles only
-    the one-time _spread_vecs split lift (a no-op at corpus scale)."""
+    the one-time spread split lift (a no-op at corpus scale)."""
     t = Tables(spark, sf_dir)
-    # _spread_vecs (r13): the per-pair truncated dot products in the
+    # spread (r13): the per-pair truncated dot products in the
     # broadcast join stage — 80 x |corpus| x 4 prefix dims of flops —
     # inherited the single embeddings split and ran as ONE task. All
     # downstream math is row-local doubles + integer hit counts with
@@ -1074,7 +1057,7 @@ def embed_matryoshka_eval(spark, sf_dir):
     # cannot move the result. Interleaved best-of-3 noop A/B at sf0.1:
     # 2.44-2.54 s -> 1.86-1.88 s (1.33x; both sides under identical
     # concurrent load), rows bit-identical at sf0.01/sf0.1.
-    d = _spread_vecs(_norm_df(t))
+    d = spread(_norm_df(t), "vec_id")
 
     def pdot(a, b, dim):
         return F.aggregate(

@@ -33,6 +33,7 @@ logged; ``tune`` cannot change a running JVM's classpath.
 
 from __future__ import annotations
 
+import contextlib
 import functools
 import glob
 import hashlib
@@ -41,6 +42,8 @@ import os
 import shutil
 import subprocess
 import tempfile
+
+from collections.abc import Callable, Iterator
 
 from py4j.protocol import Py4JJavaError
 from pyspark import SparkContext
@@ -89,6 +92,27 @@ def tune(spark: SparkSession) -> SparkSession:
         except Exception:
             pass  # non-settable on this build; best effort
     return spark
+
+
+@contextlib.contextmanager
+def shuffle_partitions(
+    spark: SparkSession, n: int | Callable[[int], int]
+) -> Iterator[None]:
+    """Run the block with ``spark.sql.shuffle.partitions`` set to ``n``
+    (or to ``n(current)``) and restore the prior value on exit, also
+    when the block raises. The setting is session-wide and read when a
+    query is planned, so the block must cover every planning it should
+    apply to: for a streaming query that is ``start()`` (the query
+    plans against a clone of the session taken there), plus, for a
+    ``foreachBatch`` body that queries the outer session, everything
+    up to termination."""
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, str(n(int(prev)) if callable(n) else n))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
 
 
 LOCAL_FS_SOURCE = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm", "NioLocalFs.java")

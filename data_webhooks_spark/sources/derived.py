@@ -7,7 +7,7 @@ own parquet (no synthetic data) with DuckDB COPY — deterministic
 as epoch microseconds (BIGINT) so both engines re-materialize the
 exact same µs timestamp without string-format parsing hazards.
 
-Files land under /root/repo/.runtime/derived/<sfname>/ (gitignored);
+Files land under ``RUNTIME_DIR``/derived/<sfname>/ (gitignored);
 ORACLE SQL references the sf0.01 paths, which are generated eagerly at
 import time so the driver can run the oracle before or after the Spark
 query.
@@ -19,7 +19,8 @@ import os
 
 import duckdb
 
-RUNTIME_DIR = "/root/repo/.runtime"
+from ..streaming.core import RUNTIME_DIR
+
 DERIVED_DIR = f"{RUNTIME_DIR}/derived"
 
 _EVENTS_SELECT = (

@@ -7,12 +7,16 @@
   id so Spark's file source replays them in order with
   maxFilesPerTrigger=1 (one micro-batch per chunk).
 - ``read_replay_stream``: readStream with the explicit chunk schema.
-- ``run_to_table``: run a streaming DF through an availableNow trigger
-  into a uniquely-named memory sink and return the result table.
+- ``drain``: run a configured streaming writer to completion
+  (availableNow) on a fresh, self-removing checkpoint, with state
+  partitions narrowed for the run; ``run_to_table`` is its memory-sink
+  case and returns the result table.
+- ``scratch_dir``: a fresh directory for an operator's own store,
+  removed with this process's tree at exit.
 
-Checkpoints/chunks live under /root/repo/.runtime (gitignored). Fresh
-checkpoint + fresh sink name per run keeps every invocation a full,
-deterministic replay.
+Chunks, stores and disk checkpoints live under ``RUNTIME_DIR``
+(gitignored). Fresh checkpoint + fresh sink name per run keeps every
+invocation a full, deterministic replay.
 """
 
 from __future__ import annotations
@@ -25,6 +29,7 @@ import uuid
 import duckdb
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import DataStreamWriter
 
 from ..io import (
     cached_derivation,
@@ -32,6 +37,7 @@ from ..io import (
     duck_parquet_src,
     source_fingerprint,
 )
+from ..session import shuffle_partitions
 
 RUNTIME_DIR = "/root/repo/.runtime"
 
@@ -108,7 +114,7 @@ def read_replay_stream(
     )
 
 
-# Replay checkpoints are ephemeral BY DESIGN: every run_to_table gets a
+# Replay checkpoints are ephemeral BY DESIGN: every drain gets a
 # fresh uuid dir and no query ever resumes from it (kill/resume tests
 # manage their own persistent checkpoints explicitly). On a local master
 # they go to tmpfs, per-uid so multi-user hosts don't fight over one
@@ -144,13 +150,13 @@ def _ckpt_base() -> str:
     return f"{RUNTIME_DIR}/ckpt"
 
 
-_CKPT_CLEANUP_REGISTERED: set[str] = set()
+_CLEANUP_REGISTERED: set[str] = set()
 
 
 def _purge_stale_pid_dirs(base: str) -> None:
-    """Remove checkpoint trees left by DEAD processes (a crashed run
-    never reaches its atexit hook; on tmpfs the leak is RAM — r12
-    advice). Only numeric (pid-named) children are touched."""
+    """Remove trees left by DEAD processes (a crashed run never reaches
+    its atexit hook; on tmpfs the leak is RAM — r12 advice). Only
+    numeric (pid-named) children are touched."""
     try:
         children = os.listdir(base)
     except OSError:
@@ -162,22 +168,34 @@ def _purge_stale_pid_dirs(base: str) -> None:
             os.kill(int(name), 0)  # raises if the pid is gone
         except ProcessLookupError:
             shutil.rmtree(os.path.join(base, name), ignore_errors=True)
-        except OSError:
-            pass  # alive but not ours, or not permitted — leave it
+        except (OSError, OverflowError):
+            pass  # alive but not ours, not permitted, or not a pid
+
+
+def _fresh_under(base: str) -> str:
+    """Fresh path under ``base/<pid>/``: this process's whole tree is
+    removed at exit, and trees of dead processes are purged on first
+    use."""
+    mine = f"{base}/{os.getpid()}"
+    if mine not in _CLEANUP_REGISTERED:
+        _purge_stale_pid_dirs(base)
+        atexit.register(shutil.rmtree, mine, ignore_errors=True)
+        _CLEANUP_REGISTERED.add(mine)
+    return f"{mine}/{uuid.uuid4().hex}"
 
 
 def checkpoint_dir() -> str:
-    """Fresh ephemeral checkpoint dir, pid-scoped so this process's
-    whole tree is removed at exit (and stale trees of dead processes
-    are purged on first use). run_to_table additionally removes its
-    own dir as soon as the query terminates."""
-    base = _ckpt_base()
-    mine = f"{base}/{os.getpid()}"
-    if mine not in _CKPT_CLEANUP_REGISTERED:
-        _purge_stale_pid_dirs(base)
-        atexit.register(shutil.rmtree, mine, ignore_errors=True)
-        _CKPT_CLEANUP_REGISTERED.add(mine)
-    return f"{mine}/{uuid.uuid4().hex}"
+    """Fresh ephemeral checkpoint dir (see _fresh_under). drain
+    additionally removes its own dir as soon as the query
+    terminates."""
+    return _fresh_under(_ckpt_base())
+
+
+def scratch_dir(kind: str) -> str:
+    """Fresh store dir under ``RUNTIME_DIR/kind`` for an operator whose
+    lazy result reads it after the operator returns, so it must live
+    until this process exits (see _fresh_under)."""
+    return _fresh_under(f"{RUNTIME_DIR}/{kind}")
 
 
 # Stateful streaming operators create one state-store instance per
@@ -213,37 +231,37 @@ STREAM_PY_STATE_PARTITIONS = int(
 )
 
 
+def drain(
+    writer: DataStreamWriter, state_partitions: int | None = None
+) -> None:
+    """Run ``writer``'s query to completion under an availableNow
+    trigger on a fresh checkpoint, removed once the query terminates
+    (nothing ever resumes from it). Shuffle partitions are
+    ``state_partitions`` (default STREAM_STATE_PARTITIONS) from start()
+    to termination, which also covers foreachBatch bodies that query
+    the outer session."""
+    ckpt = checkpoint_dir()
+    writer = writer.option("checkpointLocation", ckpt).trigger(availableNow=True)
+    try:
+        with shuffle_partitions(
+            writer._spark, state_partitions or STREAM_STATE_PARTITIONS
+        ):
+            writer.start().awaitTermination()
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
+
+
 def run_to_table(
     sdf: DataFrame,
     output_mode: str = "append",
     extra_options: dict | None = None,
     state_partitions: int | None = None,
 ) -> DataFrame:
-    """Drive a streaming DataFrame to completion (availableNow) into a
-    memory sink; returns the materialized result as a batch DataFrame.
-    The ephemeral checkpoint is removed once the query terminates (the
-    memory sink holds the result; nothing ever resumes from it)."""
+    """Drain a streaming DataFrame into a fresh memory sink and return
+    the materialized result as a batch DataFrame."""
     name = f"stream_result_{uuid.uuid4().hex[:12]}"
-    spark = sdf.sparkSession
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    ckpt = checkpoint_dir()
-    writer = (
-        sdf.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-    )
+    writer = sdf.writeStream.format("memory").queryName(name).outputMode(output_mode)
     for k, v in (extra_options or {}).items():
         writer = writer.option(k, v)
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(state_partitions or STREAM_STATE_PARTITIONS),
-    )
-    try:
-        q = writer.start()
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(name)
+    drain(writer, state_partitions)
+    return sdf.sparkSession.table(name)

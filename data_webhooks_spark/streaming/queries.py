@@ -19,7 +19,6 @@ not survive 100 TB; the watermarked append variants are the scale path.
 from __future__ import annotations
 
 import os
-import shutil
 import time
 import uuid
 from decimal import Decimal
@@ -34,12 +33,12 @@ from ..regutil import registrar
 from ..session import tune
 from .core import (
     N_CHUNKS,
-    RUNTIME_DIR,
     STREAM_PY_STATE_PARTITIONS,
-    STREAM_STATE_PARTITIONS,
     checkpoint_dir,
+    drain,
     read_replay_stream,
     run_to_table,
+    scratch_dir,
 )
 
 QUERIES: dict = {}
@@ -450,13 +449,7 @@ def stream_triggers(spark, sf_dir):
         if n:
             seen.append((int(batch_id), n))
 
-    q = (
-        s.writeStream.foreachBatch(record)
-        .option("checkpointLocation", checkpoint_dir())
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(s.writeStream.foreachBatch(record))
     return spark.createDataFrame(
         sorted(seen), "batch_id long, n_rows long"
     )
@@ -507,17 +500,13 @@ def sink_parquet(spark, sf_dir):
     """Append stream to parquet files with checkpoint, then read the
     sink back — counts must equal the source table."""
     tune(spark)
-    out = f"/root/repo/.runtime/sink_parquet/{uuid.uuid4().hex[:12]}"
+    out = scratch_dir("sink_parquet")
     s = read_replay_stream(spark, sf_dir)
-    q = (
+    drain(
         s.writeStream.format("parquet")
         .option("path", out)
-        .option("checkpointLocation", checkpoint_dir())
         .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
     return (
         spark.read.schema(
             "event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING, "
@@ -571,13 +560,7 @@ def sink_foreach_batch(spark, sf_dir):
             s = row["s"] if row["s"] is not None else Decimal(0)
             partials.append((row["n"], s))
 
-    q = (
-        s.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir())
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(s.writeStream.foreachBatch(write_batch))
     n = sum(p[0] for p in partials)
     total = sum((p[1] for p in partials), start=Decimal(0))
     return spark.createDataFrame(
@@ -1002,36 +985,17 @@ def stream_rollup_upsert(spark, sf_dir):
     hot partitions, and compaction is per-partition. Update-mode
     aggregation keeps state bounded by the watermark."""
     tune(spark)
-    out = f"{RUNTIME_DIR}/rollup/{uuid.uuid4().hex[:12]}"
     # the serving read below is lazy, so the store must outlive this
-    # function — remove it at process exit instead of leaking one
-    # ~120-dir tree per invocation (r13, same leak class as the r12
-    # checkpoint advice)
-    import atexit
-
-    atexit.register(shutil.rmtree, out, ignore_errors=True)
+    # function (scratch_dir removes it at process exit)
+    out = scratch_dir("rollup")
     agg = _rollup_agg(read_replay_stream(spark, sf_dir, files_per_trigger=2))
-    # Narrow state partitions like run_to_table does (r13): this
-    # own-sink query previously ran at the session's 32 shuffle
-    # partitions — 32 state-store instances per micro-batch for a
-    # ~120-group aggregate, pure commit overhead at fixture scale.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    ckpt = checkpoint_dir()
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS)
+    # drain narrows state partitions (r13): at the session's 32 this
+    # was 32 state-store instances per micro-batch for a ~120-group
+    # aggregate, pure commit overhead at fixture scale.
+    drain(
+        agg.writeStream.foreachBatch(_rollup_upsert_fn(out))
+        .outputMode("update")
     )
-    try:
-        q = (
-            agg.writeStream.foreachBatch(_rollup_upsert_fn(out))
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        shutil.rmtree(ckpt, ignore_errors=True)
     # explicit schema + ensured dir: an all-empty stream never writes
     # a batch, and the serving read must return an empty rollup, not
     # PATH_NOT_FOUND / UNABLE_TO_INFER_SCHEMA (empty-input sweep)
@@ -1765,11 +1729,8 @@ def stream_cdc_apply(spark, sf_dir):
     until no older upsert can still arrive — the Kafka-compaction
     rule), so 'alive' is derivable at read time forever."""
     tune(spark)
-    root = f"{RUNTIME_DIR}/cdcstate/{uuid.uuid4().hex[:12]}"
+    root = scratch_dir("cdcstate")
     os.makedirs(root, exist_ok=True)
-    import atexit
-
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
     merge_batch = _cdc_merge_batch(spark, root)
 
     # 2 files per trigger = 2 micro-batches (r13, the _ss_update_stream
@@ -1778,26 +1739,13 @@ def stream_cdc_apply(spark, sf_dir):
     # costs fixed store read+write overhead, and the merge is
     # ASSOCIATIVE by contract (identical final state regardless of
     # chunking, see docstring), so chunk-per-batch replay buys nothing.
-    # Partitions narrowed like run_to_table: the per-batch partial and
-    # the store join are user-count-bounded, and 32-task micro-shuffles
-    # on them are scheduling overhead at fixture scale.
+    # drain narrows partitions until termination, which covers
+    # merge_batch's reads of the store through the outer session: the
+    # per-batch partial and the store join are user-count-bounded, and
+    # 32-task micro-shuffles on them are scheduling overhead at
+    # fixture scale.
     s = read_replay_stream(spark, sf_dir, files_per_trigger=2)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    ckpt = checkpoint_dir()
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS)
-    )
-    try:
-        q = (
-            s.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        shutil.rmtree(ckpt, ignore_errors=True)
+    drain(s.writeStream.foreachBatch(merge_batch))
     return _cdc_read_state(spark, root)
 
 
@@ -1946,11 +1894,8 @@ def stream_hll_distinct(spark, sf_dir):
     never grows — this is the only distinct-counting shape that
     survives unbounded streams."""
     tune(spark)
-    root = f"{RUNTIME_DIR}/hllstate/{uuid.uuid4().hex[:12]}"
+    root = scratch_dir("hllstate")
     os.makedirs(root, exist_ok=True)
-    import atexit
-
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
     merge_batch = _hll_merge_batch(spark, root)
 
     # 2 micro-batches + narrowed partitions (r13, the stream_cdc_apply
@@ -1958,22 +1903,7 @@ def stream_hll_distinct(spark, sf_dir):
     # sketch — and therefore every estimate — is identical under any
     # chunking; the versioned store still crosses a batch boundary.
     s = read_replay_stream(spark, sf_dir, files_per_trigger=2)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    ckpt = checkpoint_dir()
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS)
-    )
-    try:
-        q = (
-            s.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        shutil.rmtree(ckpt, ignore_errors=True)
+    drain(s.writeStream.foreachBatch(merge_batch))
     versions = sorted(int(p[1:]) for p in os.listdir(root) if p.startswith("v"))
     st = spark.read.parquet(f"{root}/v{versions[-1]}")
     t = Tables(spark, sf_dir)

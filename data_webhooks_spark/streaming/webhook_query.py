@@ -20,9 +20,9 @@ from pyspark.sql import functions as F
 
 from ..io import duck_parquet_src
 from ..regutil import registrar
-from ..session import tune
+from ..session import shuffle_partitions, tune
 from ..sources.webhook import WebhookDataSource, free_port, post_events
-from .core import checkpoint_dir
+from .core import STREAM_STATE_PARTITIONS, checkpoint_dir, drain, read_replay_stream
 
 QUERIES: dict = {}
 ORACLE: dict = {}
@@ -83,21 +83,16 @@ def source_webhook(spark, sf_dir):
     agg = parsed.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
 
     name = f"webhook_{uuid.uuid4().hex[:10]}"
-    from .core import STREAM_STATE_PARTITIONS
-
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS)
-    )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint_dir())
-        .trigger(processingTime="100 milliseconds")
-        .start()
-    )
-    spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    # the query plans against a clone of the session taken at start()
+    with shuffle_partitions(spark, STREAM_STATE_PARTITIONS):
+        q = (
+            agg.writeStream.format("memory")
+            .queryName(name)
+            .outputMode("complete")
+            .option("checkpointLocation", checkpoint_dir())
+            .trigger(processingTime="100 milliseconds")
+            .start()
+        )
     try:
         deadline = time.time() + 120
         while time.time() < deadline:
@@ -134,7 +129,6 @@ def sink_webhook(spark, sf_dir):
     fans out: partitions are the delivery parallelism unit, and the
     per-partition client batches/pools connections."""
     from ..sources.webhook import WebhookCollector, deliver_partition
-    from .core import read_replay_stream, run_to_table
 
     tune(spark)
     collector = WebhookCollector()
@@ -148,14 +142,7 @@ def sink_webhook(spark, sf_dir):
         batch_df.foreachPartition(lambda rows: deliver_partition(port, rows))
 
     name = f"wh_sink_{uuid.uuid4().hex[:10]}"
-    q = (
-        s.writeStream.foreachBatch(deliver_batch)
-        .queryName(name)
-        .option("checkpointLocation", checkpoint_dir())
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(s.writeStream.foreachBatch(deliver_batch).queryName(name))
     collector.stop()
 
     received = spark.createDataFrame(

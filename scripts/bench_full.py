@@ -87,7 +87,7 @@ def main() -> None:
         qs[k](spark, sf_dir).toPandas()  # warmup
         for _ in range(RUNS):
             # drop persisted relations between runs (see
-            # scale_sweep.py: _pin'd subtrees are plan-keyed and would
+            # scale_sweep.py: regutil.pin'd subtrees are plan-keyed and would
             # be silently reused, measuring only post-cache stages)
             spark.catalog.clearCache()
             t0 = time.perf_counter()

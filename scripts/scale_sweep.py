@@ -653,7 +653,7 @@ def main() -> None:
             best = float("inf")
             for _ in range(2):
                 # drop persisted relations between runs: the graph
-                # ops' _pin (persist + count) is keyed by logical plan
+                # ops' regutil.pin (persist + count) is keyed by logical plan
                 # and would be REUSED across invocations, silently
                 # measuring only the post-materialization stages
                 # (r11: pagerank ×100 read 2.3 s — a cache artifact,

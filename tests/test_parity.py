@@ -70,6 +70,52 @@ def test_registry_invariants():
     assert set(QUERIES) - set(ORACLE) == EXPECTED_ROWS_ONLY
 
 
+def test_execution_mechanisms_have_one_implementation():
+    """Pins, spread, shuffle-partition overrides and the runtime
+    directory each live in one place; an operator reaches them only
+    through regutil, session and streaming.core."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(registry.__file__).parent
+    helper_names = {"_pin", "_fresh_pins", "_LIVE_PINS"}
+    calls = {"persist": set(), "localCheckpoint": set()}
+    problems = []
+    for path in sorted(pkg.rglob("*.py")):
+        mod = path.relative_to(pkg).with_suffix("").as_posix()
+        tree = ast.parse(path.read_text())
+        for top in tree.body:
+            owner = getattr(top, "name", None)
+            for node in ast.walk(top):
+                defined = getattr(node, "name", None) or getattr(node, "id", None)
+                if isinstance(node, (ast.FunctionDef, ast.Name)) and (
+                    defined in helper_names or str(defined).startswith("_spread")
+                ):
+                    problems.append(f"{mod}: defines or uses {defined}")
+                if (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr in calls
+                ):
+                    calls[node.func.attr].add(f"{mod}.{owner}")
+                if isinstance(node, ast.Constant) and isinstance(node.value, str):
+                    if "spark.sql.shuffle.partitions" in node.value and mod != "session":
+                        problems.append(f"{mod}.{owner}: sets shuffle partitions")
+                    if "/root/repo" in node.value and not (
+                        mod == "streaming/core"
+                        and isinstance(top, ast.Assign)
+                        and [t.id for t in top.targets] == ["RUNTIME_DIR"]
+                    ):
+                        problems.append(f"{mod}.{owner}: /root/repo literal")
+    assert not problems
+    assert calls["persist"] == {
+        "regutil.pin",
+        "operators/similarity._ivfpq_codebooks",  # scoped index-build persist
+    }
+    # lineage cut for the self-referencing contraction loop
+    assert calls["localCheckpoint"] == {"operators/dedup._connected_components"}
+
+
 PORTABLE_ORACLES = frozenset({
     "analytics_dau_mau", "warehouse_snapshot_diff", "scan_xml",  # r7 additions
     "sink_snapshot_commit",  # r7 addition (key-arithmetic oracle)

@@ -5,7 +5,7 @@
   item 4), per-uid (multi-user hosts), env-overridable, and cleaned up
   (run_to_table removes its checkpoint at termination; pid-scoped trees
   of dead processes are purged — r12 advice item 2).
-- run_to_table state_partitions override: python-stateful keys run at
+- run_to_table/drain state_partitions override: python-stateful keys run at
   STREAM_PY_STATE_PARTITIONS, everything else at the
   STREAM_STATE_PARTITIONS default, and the session conf is restored.
 """
@@ -106,47 +106,201 @@ def test_run_to_table_removes_its_checkpoint_and_restores_conf(
     assert leftovers == []
 
 
-# --- r13 session 2: pin lifecycle, _spread, winnowing predicate ---
+# --- r13 session 2: pin lifecycle, spread, winnowing predicate ---
+
+
+def _live_pins():
+    from data_webhooks_spark import regutil
+
+    return [df for _, df in regutil._PINS]
 
 
 def test_dedup_pin_lifecycle_releases_previous_invocation(spark, sf_dir):
     """The r12 persist() pins accumulated forever (r12 advice #1); the
-    _pin/_fresh_pins tracker must hold at most ONE op's pins resident
-    and unpersist the previous invocation's on the next op's entry."""
+    registrar's pin tracker must hold at most ONE finished op's pins
+    resident and unpersist them on the next op's entry."""
+    from data_webhooks_spark import regutil
     from data_webhooks_spark.operators import dedup
 
     dedup.QUERIES["dedup_ngram_jaccard"](spark, sf_dir)
-    assert dedup._LIVE_PINS, "pinning op must register its pin"
-    first = list(dedup._LIVE_PINS)
+    assert _live_pins(), "pinning op must register its pin"
+    first = _live_pins()
     dedup.QUERIES["dedup_containment"](spark, sf_dir)
     # previous invocation's pins were released and replaced
     # (is_cached, not storageLevel: the jdf keeps reporting the old
     # level after unpersist on Spark 4.1)
     assert all(p.is_cached is False for p in first)
-    assert len(dedup._LIVE_PINS) >= 1
-    assert all(p not in first for p in dedup._LIVE_PINS)
-    dedup._fresh_pins()
-    assert dedup._LIVE_PINS == []
+    assert len(_live_pins()) >= 1
+    assert all(p not in first for p in _live_pins())
+    regutil._release_returned()
+    assert _live_pins() == []
+
+
+def test_running_ops_pin_survives_another_threads_op_entry(spark):
+    """A pin belongs to its op's invocation: another thread entering an
+    op while that invocation still runs must not unpersist it (a
+    module-global release-everything tracker does), and the first op
+    entry after the owner returns must."""
+    import threading
+
+    from data_webhooks_spark import regutil
+
+    op = regutil.registrar({}, {})
+    pinned, entered, resume = [], threading.Event(), threading.Event()
+
+    @op("pins_and_waits")
+    def pins_and_waits(spark, sf_dir):
+        pinned.append(regutil.pin(spark.range(10)))
+        entered.set()
+        resume.wait(60)
+        return pinned[0]
+
+    @op("noop")
+    def noop(spark, sf_dir):
+        return spark.range(1)
+
+    a = threading.Thread(target=pins_and_waits, args=(spark, None))
+    a.start()
+    try:
+        assert entered.wait(60)
+        b = threading.Thread(target=noop, args=(spark, None))
+        b.start()
+        b.join(60)
+        assert not b.is_alive()
+        assert pinned[0].is_cached
+    finally:
+        resume.set()
+        a.join(60)
+    assert not a.is_alive()
+    assert pinned[0].is_cached  # nothing has entered an op since A returned
+    noop(spark, None)
+    assert not pinned[0].is_cached
+    assert all(p is not pinned[0] for p in _live_pins())
+
+
+class _FakeFrame:
+    """Just the DataFrame surface pin() and release touch."""
+
+    is_cached = False
+
+    def persist(self, *level):
+        self.is_cached = True
+        return self
+
+    def unpersist(self):
+        self.is_cached = False
+        return self
+
+
+def test_pin_tracker_under_thread_contention():
+    """More threads than cores pin and enter ops concurrently with a
+    short switch interval: no op ever loses a pin while it runs, and no
+    pin is lost from the tracker (all are released afterwards)."""
+    import sys
+    import threading
+
+    from data_webhooks_spark import regutil
+
+    op = regutil.registrar({}, {})
+    made, lost = [], []
+
+    @op("pins_many")
+    def pins_many(spark, sf_dir):
+        mine = [regutil.pin(_FakeFrame()) for _ in range(5)]
+        made.extend(mine)
+        if not all(f.is_cached for f in mine):
+            lost.append(mine)
+
+    def worker():
+        for _ in range(200):
+            pins_many(None, None)
+
+    n_threads = (os.cpu_count() or 1) + 4
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker) for _ in range(n_threads)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(120)
+        assert not any(t.is_alive() for t in threads)
+    finally:
+        sys.setswitchinterval(interval)
+    assert lost == []
+    regutil._release_returned()
+    assert _live_pins() == []
+    assert len(made) == n_threads * 200 * 5
+    assert not any(f.is_cached for f in made)
+
+
+def test_nested_op_entry_keeps_callers_pins(spark):
+    """Only the outermost entry releases: an op calling another op must
+    not free the pins it made before the call."""
+    from data_webhooks_spark import regutil
+
+    op = regutil.registrar({}, {})
+
+    @op("inner")
+    def inner(spark, sf_dir):
+        return spark.range(1)
+
+    @op("outer")
+    def outer(spark, sf_dir):
+        df = regutil.pin(spark.range(5))
+        inner(spark, sf_dir)
+        assert df.is_cached
+        return df
+
+    df = outer(spark, None)
+    assert df.is_cached
+    regutil._release_returned()
+    assert not df.is_cached
 
 
 def test_spread_engages_session_parallelism(spark, sf_dir):
     """documents.parquet is a single split at fixture SFs, so heavy
-    per-row kernels ran as ONE task; _spread must lift the stage to the
+    per-row kernels ran as ONE task; spread must lift the stage to the
     session's defaultParallelism — and must be a NO-OP when the input
     already has at least that many partitions (the 100 TB case)."""
     from data_webhooks_spark.io import Tables
-    from data_webhooks_spark.operators.dedup import _spread
+    from data_webhooks_spark.regutil import spread
 
     docs = Tables(spark, sf_dir).documents
     target = spark.sparkContext.defaultParallelism
     wide = docs.repartition(target + 7, "doc_id")
-    assert _spread(wide) is wide  # already-parallel input untouched
+    assert spread(wide, "doc_id") is wide  # already-parallel input untouched
     if target <= docs.rdd.getNumPartitions():
         pytest.skip(
             f"defaultParallelism={target} <= the fixture's "
             f"{docs.rdd.getNumPartitions()} partition(s): nothing to lift"
         )
-    assert _spread(docs).rdd.getNumPartitions() == target
+    assert spread(docs, "doc_id").rdd.getNumPartitions() == target
+
+
+def test_shuffle_partitions_scope_restores_when_body_raises(spark):
+    """A failing start() inside the scope must not leave the session
+    narrowed (the webhook source once restored outside any try)."""
+    from data_webhooks_spark.session import shuffle_partitions
+
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    with pytest.raises(RuntimeError):
+        with shuffle_partitions(spark, 3):
+            assert spark.conf.get(key) == "3"
+            raise RuntimeError("start() failed")
+    assert spark.conf.get(key) == prev
+    with shuffle_partitions(spark, lambda cur: cur + 1):
+        assert spark.conf.get(key) == str(int(prev) + 1)
+    assert spark.conf.get(key) == prev
+
+
+def test_scratch_dir_is_pid_scoped_under_runtime_dir():
+    a, b = core.scratch_dir("rollup"), core.scratch_dir("rollup")
+    mine = f"{core.RUNTIME_DIR}/rollup/{os.getpid()}"
+    assert a != b
+    assert os.path.dirname(a) == os.path.dirname(b) == mine
+    assert mine in core._CLEANUP_REGISTERED
 
 
 def test_winnowing_exists_form_matches_array_min_form(spark):
