@@ -75,9 +75,14 @@ def test_execution_mechanisms_have_one_implementation():
     directory each live in one place; an operator reaches them only
     through regutil, session and streaming.core."""
     import ast
+    import os
     import pathlib
 
+    from data_webhooks_spark.streaming import core
+
     pkg = pathlib.Path(registry.__file__).parent
+    # the absolute root that RUNTIME_DIR, the one allowed literal, names
+    root = os.path.dirname(core.RUNTIME_DIR)
     helper_names = {"_pin", "_fresh_pins", "_LIVE_PINS"}
     calls = {"persist": set(), "localCheckpoint": set()}
     problems = []
@@ -101,12 +106,12 @@ def test_execution_mechanisms_have_one_implementation():
                 if isinstance(node, ast.Constant) and isinstance(node.value, str):
                     if "spark.sql.shuffle.partitions" in node.value and mod != "session":
                         problems.append(f"{mod}.{owner}: sets shuffle partitions")
-                    if "/root/repo" in node.value and not (
+                    if root in node.value and not (
                         mod == "streaming/core"
                         and isinstance(top, ast.Assign)
                         and [t.id for t in top.targets] == ["RUNTIME_DIR"]
                     ):
-                        problems.append(f"{mod}.{owner}: /root/repo literal")
+                        problems.append(f"{mod}.{owner}: absolute repo-root literal")
     assert not problems
     assert calls["persist"] == {
         "regutil.pin",

@@ -106,7 +106,7 @@ def test_run_to_table_removes_its_checkpoint_and_restores_conf(
     assert leftovers == []
 
 
-# --- r13 session 2: pin lifecycle, spread, winnowing predicate ---
+# --- r13: pin lifecycle, spread, winnowing predicate ---
 
 
 def _live_pins():
