@@ -2,7 +2,11 @@
 
 ``Tables(spark, sf_dir)`` gives lazy attribute access to each fixture
 table as a DataFrame (``t.lineitem``, ``t.orders``, ...). Reads are
-plain ``spark.read.parquet`` so Catalyst keeps full pushdown/pruning
+``spark.read.schema(s).parquet`` with the table's own inferred schema
+``s``, memoized per source file and reader confs (``inferred_schema``):
+inferring a parquet schema runs a Spark job, so without the memo every
+table access would launch one. Supplying the schema Spark would infer
+changes nothing in the plan, so Catalyst keeps full pushdown/pruning
 freedom — filters and projections expressed downstream reach the scan
 (PushedFilters / ReadSchema in .explain).
 
@@ -16,6 +20,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from .schemas import TABLE_NAMES
 from .session import tune
@@ -78,15 +83,46 @@ def commit_derivation(out: str, marker_name: str, fingerprint: str) -> None:
         f.write(fingerprint + "\n")
 
 
+# The parquet reader confs that change what schema inference returns
+# for the same file (nanos as LongType, TIMESTAMP vs TIMESTAMP_NTZ,
+# BINARY vs STRING, INT96 as timestamp): part of the memo key, so a
+# session with other values infers afresh.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+)
+# (source_fingerprint, *conf values) -> inferred schema. Two threads
+# that miss together both infer and store equal schemas.
+_SCHEMAS: dict[tuple, StructType] = {}
+
+
+def inferred_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema ``spark.read.parquet(path)`` infers, inferred once
+    per source identity (realpath, size, mtime: a file rewritten in
+    place misses) and per session value of the inference confs."""
+    try:
+        fingerprint = source_fingerprint(path)
+    except OSError:  # not a local path: Spark resolves (or rejects) it
+        return spark.read.parquet(path).schema
+    key = (fingerprint, *(spark.conf.get(c) for c in _INFERENCE_CONFS))
+    schema = _SCHEMAS.get(key)
+    if schema is None:
+        schema = _SCHEMAS[key] = spark.read.parquet(path).schema
+    return schema
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown fixture table {name!r}; have {TABLE_NAMES}")
-    if name == "events":
-        return _load_events(spark, sf_dir)
-    return spark.read.parquet(table_path(sf_dir, name))
+    path = table_path(sf_dir, name)
+    schema = inferred_schema(spark, path)
+    df = spark.read.schema(schema).parquet(path)
+    return _normalize_events(df, schema) if name == "events" else df
 
 
-def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _normalize_events(raw: DataFrame, schema: StructType) -> DataFrame:
     """Normalize events.ts to TIMESTAMP_NTZ regardless of fixture vintage.
 
     Fixture generations have stored ``ts`` differently:
@@ -103,13 +139,13 @@ def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     Sniffing the materialized type (instead of assuming one vintage)
     keeps every events-dependent operator working across fixture
     regenerations; tests/test_fixtures.py guards the admissible set.
+    ``schema`` is the memoized inferred one ``raw`` was read with; it is
+    keyed on nanosAsLong, so the sniffed type follows that conf.
     """
     from pyspark.sql import functions as F
     from pyspark.sql.types import LongType
 
-    raw = spark.read.parquet(table_path(sf_dir, "events"))
-    ts_type = raw.schema["ts"].dataType
-    if isinstance(ts_type, LongType):
+    if isinstance(schema["ts"].dataType, LongType):
         # epoch-nanos via nanosAsLong → truncate to µs
         return raw.withColumn(
             "ts", F.expr("CAST(timestamp_micros(ts div 1000) AS TIMESTAMP_NTZ)")

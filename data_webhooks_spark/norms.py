@@ -76,11 +76,12 @@ def _scaled_units(c: Column, scale: int) -> Column:
     double (BIGINT result, sign-branched so negatives round away from
     zero exactly like a decimal cast). Requires |x|*10^scale < 2^53,
     which holds for every money/value column by orders of magnitude.
-    Non-finite x yields NULL (policy above)."""
-    m = F.lit(float(10**scale))
-    return F.when(
-        _finite(c) & (c >= 0), F.floor(c * m + F.lit(0.5))
-    ).when(_finite(c), -F.floor(-c * m + F.lit(0.5)))
+    Non-finite x yields NULL (policy above). Each shared subexpression
+    is built once and reused: every Column call is a py4j round trip."""
+    m, half, finite = F.lit(float(10**scale)), F.lit(0.5), _finite(c)
+    return F.when(finite & (c >= 0), F.floor(c * m + half)).when(
+        finite, -F.floor(-c * m + half)
+    )
 
 
 def dec_sum(col: str | Column, alias: str, scale: int = MONEY_SCALE) -> Column:

@@ -348,21 +348,16 @@ def dedup_minhash(spark, sf_dir):
     # shuffle 32x; signatures are re-attached afterwards from the
     # (1 row/doc) sig table, which AQE broadcasts at this size and
     # shuffle-joins at scale.
+    # One SQL string, parsed once by the JVM: the same 32-struct tree
+    # built from Column calls costs ~10 py4j round trips per band.
+    band_structs = ", ".join(
+        f"struct({j} AS band, xxhash64({j}, "
+        + ", ".join(f"get(sig, {R * j + r})" for r in range(R))
+        + ") AS key)"
+        for j in range(K // R)
+    )
     bands = sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).alias("band"),
-                        F.xxhash64(
-                            F.lit(j), *[F.get("sig", R * j + r) for r in range(R)]
-                        ).alias("key"),
-                    )
-                    for j in range(K // R)
-                ]
-            )
-        ).alias("bk"),
+        "doc_id", F.expr(f"explode(array({band_structs})) AS bk")
     ).select("doc_id", "bk.band", "bk.key")
     a, b = bands.alias("a"), bands.alias("b")
     pairs = (

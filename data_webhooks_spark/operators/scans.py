@@ -12,7 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..io import Tables
+from ..io import Tables, load_table
 from ..norms import dec_sum, o_dec_sum
 from ..regutil import registrar
 from ..sources.derived import (
@@ -432,9 +432,9 @@ def scan_parquet_metadata(spark, sf_dir):
     same query audits per-partition file health (row-count skew,
     degenerate key ranges) directly from a full scan it was running
     anyway."""
-    df = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     return (
-        df.select(
+        load_table(spark, sf_dir, "lineitem")
+        .select(
             F.col("_metadata.file_name").alias("file_name"), "l_orderkey"
         )
         .groupBy("file_name")

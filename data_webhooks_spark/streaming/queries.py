@@ -19,6 +19,7 @@ not survive 100 TB; the watermarked append variants are the scale path.
 from __future__ import annotations
 
 import os
+import shutil
 import time
 import uuid
 from decimal import Decimal
@@ -465,6 +466,7 @@ def source_rate(spark, sf_dir):
     exactly the integers 0..199, which is the SQL oracle (r4)."""
     tune(spark)
     name = f"rate_{uuid.uuid4().hex[:8]}"
+    ckpt = checkpoint_dir()
     s = (
         spark.readStream.format("rate-micro-batch")
         .option("rowsPerBatch", 50)
@@ -477,7 +479,7 @@ def source_rate(spark, sf_dir):
         .writeStream.format("memory")
         .queryName(name)
         .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir())
+        .option("checkpointLocation", ckpt)
         .start()
     )
     try:
@@ -489,6 +491,9 @@ def source_rate(spark, sf_dir):
     finally:
         q.stop()
         q.awaitTermination()
+        # stopped by row count, so drain cannot take it; nothing
+        # resumes from the checkpoint, so remove it the way drain does
+        shutil.rmtree(ckpt, ignore_errors=True)
     return spark.table(name).filter(F.col("value") < 200)
 
 

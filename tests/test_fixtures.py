@@ -124,3 +124,48 @@ def test_cached_derivation_clears_markerless_partial(tmp_path):
     # fingerprint mismatch clears as before
     assert cached_derivation(out, "_done", "fp2") is False
     assert not os.path.exists(out)
+
+
+def test_schema_memo_misses_on_rewrite(spark, tmp_path):
+    """A table rewritten in place with another schema (new mtime) must
+    not be read with the schema memoized for the old file."""
+    import pyarrow as pa
+
+    path = table_path(str(tmp_path), "region")
+    pq.write_table(pa.table({"r_regionkey": [1, 2], "r_name": ["a", "b"]}), path)
+    assert load_table(spark, str(tmp_path), "region").columns == [
+        "r_regionkey", "r_name"
+    ]
+    pq.write_table(pa.table({"r_regionkey": [3], "r_comment": [0.5]}), path)
+    st = os.stat(path)
+    os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000_000))
+    df = load_table(spark, str(tmp_path), "region")
+    assert df.columns == ["r_regionkey", "r_comment"]
+    assert df.collect() == [(3, 0.5)]
+
+
+def test_events_ts_follows_nanos_as_long(spark, tmp_path):
+    """On a TIMESTAMP(NANOS) clone of events the inferred ts type
+    depends on spark.sql.legacy.parquet.nanosAsLong; flipping it must
+    miss the schema memo, not reuse the LongType schema."""
+    import pyarrow as pa
+    from pyspark.errors import AnalysisException
+
+    src = pq.read_table(table_path(SF_DIR, "events"))
+    i = src.schema.get_field_index("ts")
+    nanos = src.set_column(i, "ts", src.column("ts").cast(pa.timestamp("ns")))
+    pq.write_table(nanos, table_path(str(tmp_path), "events"), version="2.6")
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    prev = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "true")
+        ev = load_table(spark, str(tmp_path), "events")
+        assert isinstance(ev.schema["ts"].dataType, T.TimestampNTZType)
+        want = load_table(spark, SF_DIR, "events").agg({"ts": "max"}).first()
+        assert ev.agg({"ts": "max"}).first() == want
+        spark.conf.set(key, "false")
+        # Spark cannot read TIMESTAMP(NANOS) without nanosAsLong
+        with pytest.raises(AnalysisException, match="PARQUET_TYPE_ILLEGAL"):
+            load_table(spark, str(tmp_path), "events")
+    finally:
+        spark.conf.set(key, prev)

@@ -1194,3 +1194,22 @@ def test_stateful_kill_resume_exactly_once(spark, sf_dir, duck):
     got = _ss_finalize(emissions).toPandas()
     oracle = duck.execute(registry.oracle_sql()["stream_stateful"]).df()
     assert not compare_frames(got, oracle)
+
+
+def test_source_rate_removes_its_checkpoint(spark, sf_dir):
+    """source_rate stops its query by row count, not at end-of-input,
+    so drain cannot run it; it must still remove its checkpoint once
+    the query terminates instead of leaving it in the pid tree until
+    exit."""
+    import os
+
+    from data_webhooks_spark.streaming import core
+
+    mine = f"{core._ckpt_base()}/{os.getpid()}"
+
+    def entries():
+        return set(os.listdir(mine)) if os.path.isdir(mine) else set()
+
+    before = entries()
+    assert registry.queries()["source_rate"](spark, sf_dir).count() == 200
+    assert entries() <= before
