@@ -3,7 +3,7 @@
 ``entry(spark)`` is a smoke check; each ``queries()[name]`` at
 sf=0.01 is compared against the matching ``oracle_sql()[name]`` on
 DuckDB (row-count + schema + order-insensitive value-hash), as
-``tests/test_parity.py`` and ``scripts/driver_sim.py`` do.
+``tests/test_parity.py`` does.
 
 Implementation lives in ``data_webhooks_spark``; the operator
 inventory is SURVEY.md §2 and every key here maps 1:1 to a row there.

@@ -1,14 +1,23 @@
-"""Fixture table loaders.
+"""Fixture table loaders, and the lifecycle of what the engine writes
+and reads back.
 
 ``Tables(spark, sf_dir)`` gives lazy attribute access to each fixture
-table as a DataFrame (``t.lineitem``, ``t.orders``, ...). Reads are
-``spark.read.schema(s).parquet`` with the table's own inferred schema
-``s``, memoized per source file and reader confs (``inferred_schema``):
-inferring a parquet schema runs a Spark job, so without the memo every
-table access would launch one. Supplying the schema Spark would infer
-changes nothing in the plan, so Catalyst keeps full pushdown/pruning
-freedom — filters and projections expressed downstream reach the scan
-(PushedFilters / ReadSchema in .explain).
+table as a DataFrame (``t.lineitem``, ``t.orders``, ...).
+
+Every parquet re-read, of a fixture or of a layout the engine wrote,
+goes through ``read_parquet``: ``spark.read.schema(s).parquet`` with
+the inferred schema ``s`` memoized per source files and reader confs
+(``inferred_schema``). Inferring a parquet schema runs a Spark job, so
+without the memo every read would launch one. Supplying the schema
+Spark would infer changes nothing in the plan, so Catalyst keeps full
+pushdown/pruning freedom — filters and projections expressed
+downstream reach the scan (PushedFilters / ReadSchema in .explain).
+
+Every artifact derived from the fixtures (replay chunks, JSONL/CSV
+twins, layouts, index codebooks and codes, the compiled checkpoint
+FileContext) is built once by ``derived``: keyed on the
+``source_fingerprint`` of what it reads, built into a temp sibling and
+renamed into place, so a crash never leaves a partial artifact.
 
 At 100 TB the same loader works against a partitioned table layout
 (e.g. events partitioned by date(ts)); nothing here assumes a single
@@ -18,6 +27,10 @@ file.
 from __future__ import annotations
 
 import os
+import shutil
+import tempfile
+
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
@@ -43,10 +56,10 @@ def duck_parquet_src(path: str) -> str:
 
 
 def source_fingerprint(*paths: str) -> str:
-    """Identity of derivation inputs for marker-file caches: realpath +
-    size + mtime per source. Derived artifacts (replay chunks, JSONL
-    twins, partitioned layouts) key their "done" markers on THIS, not
-    on the fixture dir's basename — two different fixtures can share a
+    """Identity of derivation inputs: realpath + size + mtime per
+    source. Derived artifacts (replay chunks, JSONL twins, layouts,
+    index codes) are keyed on THIS (see ``derived``), not on the
+    fixture dir's basename — two different fixtures can share a
     basename (pytest tmp dirs repeat across runs), and silently reusing
     a stale derivation is a silent-wrong-answer class of bug."""
 
@@ -57,30 +70,46 @@ def source_fingerprint(*paths: str) -> str:
     return ";".join(one(p) for p in paths)
 
 
-def cached_derivation(out: str, marker_name: str, fingerprint: str) -> bool:
-    """True if `out` already holds a derivation for `fingerprint`;
-    otherwise clears any stale content and returns False (caller
-    derives, then calls commit_derivation)."""
-    marker = f"{out}/{marker_name}"
-    if os.path.exists(marker):
-        with open(marker) as f:
-            if f.read().strip() == fingerprint:
-                return True
-        import shutil
-
-        shutil.rmtree(out)
-    elif os.path.exists(out):
-        # a crashed derivation leaves a partial dir with no marker;
-        # writers without mode('overwrite') would hard-fail on it
-        import shutil
-
-        shutil.rmtree(out)
-    return False
+_MARKER = ".complete"
 
 
-def commit_derivation(out: str, marker_name: str, fingerprint: str) -> None:
-    with open(f"{out}/{marker_name}", "w") as f:
-        f.write(fingerprint + "\n")
+def derived(out: str, fingerprint: str, build: Callable[[str], object]) -> str:
+    """Build-once artifact: ``out`` holding what ``build`` derives from
+    the inputs ``fingerprint`` identifies (see source_fingerprint).
+
+    If ``out/.complete`` holds ``fingerprint``, ``out`` is returned as
+    it is. Otherwise ``build(tmp)`` fills a fresh temp sibling of
+    ``out``, the marker is written into it, a stale ``out`` is removed
+    and the temp dir is renamed into place. A crash therefore never
+    leaves a partial ``out``, and a concurrent builder that loses the
+    rename discards its copy."""
+    if _holds(out, fingerprint):
+        return out
+    parent, name = os.path.split(out)
+    os.makedirs(parent, exist_ok=True)
+    tmp = tempfile.mkdtemp(prefix=f".{name}-", dir=parent)
+    try:
+        build(tmp)
+        with open(f"{tmp}/{_MARKER}", "w") as f:
+            f.write(fingerprint + "\n")
+        if not _holds(out, fingerprint):
+            shutil.rmtree(out, ignore_errors=True)
+            try:
+                os.rename(tmp, out)
+            except OSError:
+                if not _holds(out, fingerprint):
+                    raise
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)  # gone once renamed
+    return out
+
+
+def _holds(out: str, fingerprint: str) -> bool:
+    try:
+        with open(f"{out}/{_MARKER}") as f:
+            return f.read().strip() == fingerprint
+    except OSError:
+        return False
 
 
 # The parquet reader confs that change what schema inference returns
@@ -98,31 +127,36 @@ _INFERENCE_CONFS = (
 _SCHEMAS: dict[tuple, StructType] = {}
 
 
-def inferred_schema(spark: SparkSession, path: str) -> StructType:
-    """The schema ``spark.read.parquet(path)`` infers, inferred once
-    per source identity (realpath, size, mtime: a file rewritten in
-    place misses) and per session value of the inference confs."""
+def inferred_schema(spark: SparkSession, *paths: str) -> StructType:
+    """The schema ``spark.read.parquet(*paths)`` infers, inferred once
+    per source identity (realpath, size, mtime of each path: a file
+    rewritten in place, or a derived dir rebuilt, misses) and per
+    session value of the inference confs."""
     try:
-        fingerprint = source_fingerprint(path)
+        fingerprint = source_fingerprint(*paths)
     except OSError:  # not a local path: Spark resolves (or rejects) it
-        return spark.read.parquet(path).schema
+        return spark.read.parquet(*paths).schema
     key = (fingerprint, *(spark.conf.get(c) for c in _INFERENCE_CONFS))
     schema = _SCHEMAS.get(key)
     if schema is None:
-        schema = _SCHEMAS[key] = spark.read.parquet(path).schema
+        schema = _SCHEMAS[key] = spark.read.parquet(*paths).schema
     return schema
+
+
+def read_parquet(spark: SparkSession, *paths: str) -> DataFrame:
+    """``spark.read.parquet(*paths)`` with the memoized inferred schema:
+    the same DataFrame and plan, without an inference job per call."""
+    return spark.read.schema(inferred_schema(spark, *paths)).parquet(*paths)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown fixture table {name!r}; have {TABLE_NAMES}")
-    path = table_path(sf_dir, name)
-    schema = inferred_schema(spark, path)
-    df = spark.read.schema(schema).parquet(path)
-    return _normalize_events(df, schema) if name == "events" else df
+    df = read_parquet(spark, table_path(sf_dir, name))
+    return _normalize_events(df) if name == "events" else df
 
 
-def _normalize_events(raw: DataFrame, schema: StructType) -> DataFrame:
+def _normalize_events(raw: DataFrame) -> DataFrame:
     """Normalize events.ts to TIMESTAMP_NTZ regardless of fixture vintage.
 
     Fixture generations have stored ``ts`` differently:
@@ -139,13 +173,13 @@ def _normalize_events(raw: DataFrame, schema: StructType) -> DataFrame:
     Sniffing the materialized type (instead of assuming one vintage)
     keeps every events-dependent operator working across fixture
     regenerations; tests/test_fixtures.py guards the admissible set.
-    ``schema`` is the memoized inferred one ``raw`` was read with; it is
-    keyed on nanosAsLong, so the sniffed type follows that conf.
+    ``raw`` is read with the memoized inferred schema, which is keyed on
+    nanosAsLong, so the sniffed type follows that conf.
     """
     from pyspark.sql import functions as F
     from pyspark.sql.types import LongType
 
-    if isinstance(schema["ts"].dataType, LongType):
+    if isinstance(raw.schema["ts"].dataType, LongType):
         # epoch-nanos via nanosAsLong → truncate to µs
         return raw.withColumn(
             "ts", F.expr("CAST(timestamp_micros(ts div 1000) AS TIMESTAMP_NTZ)")

@@ -13,23 +13,23 @@ operators rather than prose.
   shuffling the two largest tables in the warehouse. DuckDB-verified
   against the plain join.
 
-Layouts are written once per scale factor under .runtime (content
-derives deterministically from the fixtures; a marker file skips
-rewrites). Plan properties are asserted in tests/test_plans.py.
+Layouts are written once per fixture under ``RUNTIME_DIR/layout/<sf>``
+by ``io.derived`` (content derives deterministically from the events
+fixture and is keyed on its source fingerprint), and read back with
+``io.read_parquet``'s memoized schema, so building a layout key after
+its first call launches no Spark job. Plan properties are asserted in
+tests/test_plans.py.
 """
 
 from __future__ import annotations
 
+import glob
+import json
 import os
 
 from pyspark.sql import functions as F
 
-from ..io import (
-    Tables,
-    cached_derivation,
-    commit_derivation,
-    source_fingerprint,
-)
+from ..io import Tables, derived, read_parquet, source_fingerprint
 from ..norms import dec_sum, finite_or_null, o_dec_sum
 from ..regutil import registrar
 from ..streaming.core import RUNTIME_DIR
@@ -43,20 +43,27 @@ def _sf_name(sf_dir: str) -> str:
     return os.path.basename(sf_dir.rstrip("/"))
 
 
+def _events_layout(spark, sf_dir: str, name: str, write) -> str:
+    """``RUNTIME_DIR/layout/<sf>/<name>``: the events table laid out by
+    ``write(events, out)``, built once per events fingerprint."""
+    return derived(
+        f"{RUNTIME_DIR}/layout/{_sf_name(sf_dir)}/{name}",
+        source_fingerprint(f"{sf_dir}/events.parquet"),
+        lambda out: write(Tables(spark, sf_dir).events, out),
+    )
+
+
 def partitioned_events_path(spark, sf_dir: str) -> str:
     """events written hive-partitioned by event_date (once per sf)."""
-    out = f"{RUNTIME_DIR}/layout/{_sf_name(sf_dir)}/events_by_day"
-    fp = source_fingerprint(f"{sf_dir}/events.parquet")
-    if not cached_derivation(out, "_done", fp):
-        t = Tables(spark, sf_dir)
-        (
-            t.events.withColumn("event_date", F.to_date("ts"))
-            .write.mode("overwrite")
-            .partitionBy("event_date")
-            .parquet(out)
-        )
-        commit_derivation(out, "_done", fp)
-    return out
+    return _events_layout(
+        spark,
+        sf_dir,
+        "events_by_day",
+        lambda ev, out: ev.withColumn("event_date", F.to_date("ts"))
+        .write.mode("overwrite")
+        .partitionBy("event_date")
+        .parquet(out),
+    )
 
 
 def read_partitioned_events(spark, sf_dir: str):
@@ -156,32 +163,30 @@ def join_bucketed(spark, sf_dir):
 def fragmented_events_path(spark, sf_dir: str) -> str:
     """events deliberately shattered into 64 tiny unsorted files (once
     per sf) — the small-files problem every streaming ingest creates."""
-    out = f"{RUNTIME_DIR}/layout/{_sf_name(sf_dir)}/events_fragmented"
-    fp = source_fingerprint(f"{sf_dir}/events.parquet")
-    if not cached_derivation(out, "_done", fp):
-        t = Tables(spark, sf_dir)
-        t.events.repartition(64, "event_id").write.mode("overwrite").parquet(out)
-        commit_derivation(out, "_done", fp)
-    return out
+    return _events_layout(
+        spark,
+        sf_dir,
+        "events_fragmented",
+        lambda ev, out: ev.repartition(64, "event_id")
+        .write.mode("overwrite")
+        .parquet(out),
+    )
 
 
 def compacted_events_path(spark, sf_dir: str) -> str:
     """The fragmented layout compacted to 4 time-clustered files (once
     per sf): range-partition by ts so each output file owns a
     contiguous time slice, sorted within for row-group stat locality."""
-    out = f"{RUNTIME_DIR}/layout/{_sf_name(sf_dir)}/events_compacted"
-    fp = source_fingerprint(f"{sf_dir}/events.parquet")
-    if not cached_derivation(out, "_done", fp):
-        frag = fragmented_events_path(spark, sf_dir)
-        (
-            spark.read.parquet(frag)
-            .repartitionByRange(4, "ts")
-            .sortWithinPartitions("ts", "event_id")
-            .write.mode("overwrite")
-            .parquet(out)
-        )
-        commit_derivation(out, "_done", fp)
-    return out
+    return _events_layout(
+        spark,
+        sf_dir,
+        "events_compacted",
+        lambda _, out: read_parquet(spark, fragmented_events_path(spark, sf_dir))
+        .repartitionByRange(4, "ts")
+        .sortWithinPartitions("ts", "event_id")
+        .write.mode("overwrite")
+        .parquet(out),
+    )
 
 
 @op(
@@ -209,8 +214,7 @@ def compact_files(spark, sf_dir):
     row-group stats), and the sortWithinPartitions tightens min/max
     bounds per row group. The op's plan reads ONLY the compacted
     layout — equality with the oracle proves losslessness."""
-    path = compacted_events_path(spark, sf_dir)
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, compacted_events_path(spark, sf_dir))
     nfiles = df.select(F.input_file_name().alias("f")).agg(
         F.countDistinct("f").alias("nf")
     )
@@ -245,26 +249,21 @@ def _zvalue(u, h):
 def zordered_events_path(spark, sf_dir: str) -> str:
     """events clustered by the Z-order interleave of (user_id, hour
     index) into 8 range-partitioned files (once per sf)."""
-    out = f"{RUNTIME_DIR}/layout/{_sf_name(sf_dir)}/events_zorder"
-    fp = source_fingerprint(f"{sf_dir}/events.parquet")
-    if not cached_derivation(out, "_done", fp):
-        t = Tables(spark, sf_dir)
+
+    def write(ev, out):
         hour_idx = (
-            F.unix_timestamp(F.col("ts").cast("timestamp"))
-            / F.lit(3600)
+            F.unix_timestamp(F.col("ts").cast("timestamp")) / F.lit(3600)
         ).cast("long")
         (
-            t.events.withColumn(
-                "zv", _zvalue(F.col("user_id"), hour_idx)
-            )
+            ev.withColumn("zv", _zvalue(F.col("user_id"), hour_idx))
             .repartitionByRange(8, "zv")
             .sortWithinPartitions("zv")
             .drop("zv")
             .write.mode("overwrite")
             .parquet(out)
         )
-        commit_derivation(out, "_done", fp)
-    return out
+
+    return _events_layout(spark, sf_dir, "events_zorder", write)
 
 
 @op(
@@ -293,8 +292,7 @@ def zorder_layout(spark, sf_dir):
     touch nearly all of them). The aggregate itself is hash-verified
     against the unclustered source — clustering must never change
     query results, only which files hold them."""
-    path = zordered_events_path(spark, sf_dir)
-    df = spark.read.parquet(path).filter(
+    df = read_parquet(spark, zordered_events_path(spark, sf_dir)).filter(
         F.col("user_id").between(100, 299)
         & (F.col("ts") >= F.lit("2024-01-08").cast("timestamp_ntz"))
         & (F.col("ts") < F.lit("2024-01-15").cast("timestamp_ntz"))
@@ -316,26 +314,48 @@ def versioned_events_path(spark, sf_dir: str) -> str:
     files from two commits side by side, and per-version manifest
     files list which data files belong to each snapshot. Readers that
     plan from a manifest get snapshot isolation for free — files from
-    later commits sit in the same directory but are invisible."""
-    import glob
-    import json
+    later commits sit in the same directory but are invisible.
 
-    out = f"{RUNTIME_DIR}/layout/{_sf_name(sf_dir)}/events_versioned"
-    fp = source_fingerprint(f"{sf_dir}/events.parquet")
-    if not cached_derivation(out, "_done", fp):
-        t = Tables(spark, sf_dir)
-        base = t.events.filter(F.col("event_id") % 3 != 0)
-        late = t.events.filter(F.col("event_id") % 3 == 0)
-        base.repartition(2).write.mode("overwrite").parquet(f"{out}/data_v1")
-        late.repartition(1).write.mode("overwrite").parquet(f"{out}/data_v2")
-        v1_files = sorted(glob.glob(f"{out}/data_v1/part-*.parquet"))
-        v2_files = v1_files + sorted(glob.glob(f"{out}/data_v2/part-*.parquet"))
-        os.makedirs(f"{out}/_manifests", exist_ok=True)
-        for v, files in ((1, v1_files), (2, v2_files)):
-            with open(f"{out}/_manifests/v{v}.json", "w") as f:
-                json.dump({"version": v, "files": files}, f)
-        commit_derivation(out, "_done", fp)
-    return out
+    Manifests list data files relative to the layout dir (the layout is
+    built in a temp dir and renamed into place, and a table directory
+    should survive a move anyway); ``_manifest_files`` resolves them."""
+
+    def write(ev, out):
+        ev.filter(F.col("event_id") % 3 != 0).repartition(2).write.mode(
+            "overwrite"
+        ).parquet(f"{out}/data_v1")
+        ev.filter(F.col("event_id") % 3 == 0).repartition(1).write.mode(
+            "overwrite"
+        ).parquet(f"{out}/data_v2")
+        v1_files = _data_files(out, "data_v1")
+        os.makedirs(f"{out}/_manifests")
+        _publish_manifest(out, 1, v1_files)
+        _publish_manifest(out, 2, v1_files + _data_files(out, "data_v2"))
+
+    return _events_layout(spark, sf_dir, "events_versioned", write)
+
+
+def _data_files(table: str, sub: str) -> list[str]:
+    """``table/sub``'s part files, relative to ``table``, sorted."""
+    return sorted(
+        os.path.relpath(p, table) for p in glob.glob(f"{table}/{sub}/part-*.parquet")
+    )
+
+
+def _publish_manifest(table: str, version: int, files: list[str]) -> None:
+    """Write snapshot ``version``'s manifest ATOMICALLY (temp file +
+    os.replace): a reader sees the previous manifest or this complete
+    one, never a half-written file."""
+    path = f"{table}/_manifests/v{version}.json"
+    with open(path + ".tmp", "w") as f:
+        json.dump({"version": version, "files": files}, f)
+    os.replace(path + ".tmp", path)  # the atomic commit point
+
+
+def _manifest_files(table: str, version: int) -> list[str]:
+    """Snapshot ``version``'s data files, resolved against ``table``."""
+    with open(f"{table}/_manifests/v{version}.json") as f:
+        return [f"{table}/{p}" for p in json.load(f)["files"]]
 
 
 @op(
@@ -359,19 +379,15 @@ def scan_snapshot_manifest(spark, sf_dir):
 
     The manifest is metadata (a file list) — reading it driver-side is
     the same O(manifest) planning cost every table format pays; the
-    data path stays `spark.read.parquet(*files)`, which preserves all
+    data path stays `read_parquet(spark, *files)`, which preserves all
     pushdown/pruning. Output: per-type counts AS OF each version,
     hash-checked against the key-arithmetic definition of the two
     commits."""
-    import json
-
     path = versioned_events_path(spark, sf_dir)
     out = None
     for v in (1, 2):
-        with open(f"{path}/_manifests/v{v}.json") as f:
-            files = json.load(f)["files"]
         df = (
-            spark.read.parquet(*files)
+            read_parquet(spark, *_manifest_files(path, v))
             .groupBy("event_type")
             .agg(F.count(F.lit(1)).alias("n"))
             .select(F.lit(v).alias("version"), "event_type", "n")
@@ -383,27 +399,24 @@ def scan_snapshot_manifest(spark, sf_dir):
 def bloom_events_path(spark, sf_dir: str) -> str:
     """events rewritten once per sf with parquet BLOOM FILTERS on
     user_id, range-clustered so row groups are user_id-selective."""
-    out = f"{RUNTIME_DIR}/layout/{_sf_name(sf_dir)}/events_bloom"
-    fp = source_fingerprint(f"{sf_dir}/events.parquet")
-    if not cached_derivation(out, "_done", fp):
-        t = Tables(spark, sf_dir)
-        (
-            t.events.repartitionByRange(8, "user_id")
-            .sortWithinPartitions("user_id", "ts")
-            .write.mode("overwrite")
-            # the per-column parquet-mr form
-            # (parquet.bloom.filter.enabled#user_id) is NOT plumbed
-            # through this Spark version's writer options (verified:
-            # byte-identical output); the global toggle is. On a
-            # production layout job, scope blooms per column via the
-            # hadoop conf to avoid paying for bitsets on wide text
-            # columns.
-            .option("parquet.bloom.filter.enabled", "true")
-            .option("parquet.block.size", str(1 << 20))
-            .parquet(out)
-        )
-        commit_derivation(out, "_done", fp)
-    return out
+    return _events_layout(
+        spark,
+        sf_dir,
+        "events_bloom",
+        lambda ev, out: ev.repartitionByRange(8, "user_id")
+        .sortWithinPartitions("user_id", "ts")
+        .write.mode("overwrite")
+        # the per-column parquet-mr form
+        # (parquet.bloom.filter.enabled#user_id) is NOT plumbed
+        # through this Spark version's writer options (verified:
+        # byte-identical output); the global toggle is. On a
+        # production layout job, scope blooms per column via the
+        # hadoop conf to avoid paying for bitsets on wide text
+        # columns.
+        .option("parquet.bloom.filter.enabled", "true")
+        .option("parquet.block.size", str(1 << 20))
+        .parquet(out),
+    )
 
 
 @op(
@@ -434,8 +447,7 @@ def scan_parquet_bloom(spark, sf_dir):
     metadata is really present in the written footers and the plan
     carries the pushed filter. Results are layout-invariant: the
     oracle runs the same predicate on the ORIGINAL fixture file."""
-    path = bloom_events_path(spark, sf_dir)
-    ev = spark.read.parquet(path)
+    ev = read_parquet(spark, bloom_events_path(spark, sf_dir))
     v = finite_or_null("value")
     units = F.when(v >= 0, F.floor(v * 100.0 + F.lit(0.5))).when(
         v < 0, -F.floor(-v * 100.0 + F.lit(0.5))
@@ -486,33 +498,25 @@ def sink_snapshot_commit(spark, sf_dir):
     Output: per (version, event_type) counts AS OF v1, v2, v3 —
     hash-checked against the key-arithmetic definition of the three
     commits. The deleted type is absent from v3 and untouched in
-    v1/v2."""
-    import glob
-    import json
+    v1/v2.
 
+    The rewritten files are built once (``io.derived``: a crash leaves
+    no partial data_v3), and v3's manifest is published after them."""
     path = versioned_events_path(spark, sf_dir)
-    v3_manifest = f"{path}/_manifests/v3.json"
-    if not os.path.exists(v3_manifest):
-        with open(f"{path}/_manifests/v2.json") as f:
-            v2_files = json.load(f)["files"]
-        (
-            spark.read.parquet(*v2_files)
-            .filter(F.col("event_type") != "error")
-            .repartition(2)
-            .write.mode("overwrite")
-            .parquet(f"{path}/data_v3")
-        )
-        v3_files = sorted(glob.glob(f"{path}/data_v3/part-*.parquet"))
-        tmp = v3_manifest + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"version": 3, "files": v3_files}, f)
-        os.replace(tmp, v3_manifest)  # the atomic commit point
+    derived(
+        f"{path}/data_v3",
+        source_fingerprint(f"{path}/_manifests/v2.json"),
+        lambda out: read_parquet(spark, *_manifest_files(path, 2))
+        .filter(F.col("event_type") != "error")
+        .repartition(2)
+        .write.mode("overwrite")
+        .parquet(out),
+    )
+    _publish_manifest(path, 3, _data_files(path, "data_v3"))
     out = None
     for v in (1, 2, 3):
-        with open(f"{path}/_manifests/v{v}.json") as f:
-            files = json.load(f)["files"]
         df = (
-            spark.read.parquet(*files)
+            read_parquet(spark, *_manifest_files(path, v))
             .groupBy("event_type")
             .agg(F.count(F.lit(1)).cast("long").alias("n"))
             .select(F.lit(v).alias("version"), "event_type", "n")

@@ -10,15 +10,18 @@ driver's schema comparison and a full extra pass over the data at
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
-from ..io import Tables, load_table
+from ..io import Tables, derived, load_table, source_fingerprint
 from ..norms import dec_sum, o_dec_sum
 from ..regutil import registrar
 from ..sources.derived import (
     BLOB_DOCS,
     CUSTOMER_CSV_COLUMNS,
     CUSTOMER_CSV_SPARK_SCHEMA,
+    DERIVED_DIR,
     EVENTS_JSON_COLUMNS,
     EVENTS_JSON_SPARK_SCHEMA,
     ORACLE_CUSTOMER_CSV,
@@ -31,6 +34,10 @@ from ..sources.derived import (
 QUERIES: dict = {}
 ORACLE: dict = {}
 op = registrar(QUERIES, ORACLE)
+
+
+def _derived_dir(sf_dir: str) -> str:
+    return f"{DERIVED_DIR}/{os.path.basename(sf_dir.rstrip('/'))}"
 
 
 @op(
@@ -90,17 +97,13 @@ def scan_orc(spark, sf_dir):
     read back with an explicit schema. The oracle reads the original
     parquet view — same rows, proving the ORC round-trip is lossless.
     DuckDB has no ORC reader, so parity runs through the content."""
-    import os
-
-    from ..sources.derived import DERIVED_DIR
-
-    sfname = os.path.basename(sf_dir.rstrip("/"))
-    path = f"{DERIVED_DIR}/{sfname}/customer_orc"
-    marker = f"{path}/_SUCCESS"
-    t = Tables(spark, sf_dir)
+    customer = Tables(spark, sf_dir).customer
     cols = ["c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment"]
-    if not os.path.exists(marker):
-        t.customer.select(*cols).write.mode("overwrite").orc(path)
+    path = derived(
+        f"{_derived_dir(sf_dir)}/customer_orc",
+        source_fingerprint(f"{sf_dir}/customer.parquet"),
+        lambda out: customer.select(*cols).write.mode("overwrite").orc(out),
+    )
     return spark.read.schema(
         "c_custkey LONG, c_name STRING, c_nationkey INT, "
         "c_acctbal DOUBLE, c_mktsegment STRING"
@@ -303,23 +306,17 @@ def scan_xml(spark, sf_dir):
     schema-on-read projection as JSON — embarrassingly parallel; at
     100 TB the real cost knob is multiline documents, which this
     row-per-record layout avoids by construction."""
-    import os
-
-    from ..io import cached_derivation, commit_derivation, source_fingerprint
-    from ..sources.derived import DERIVED_DIR
-
-    sfname = os.path.basename(sf_dir.rstrip("/"))
-    path = f"{DERIVED_DIR}/{sfname}/supplier_xml"
-    t = Tables(spark, sf_dir)
+    supplier = Tables(spark, sf_dir).supplier
     cols = ["s_suppkey", "s_name", "s_nationkey", "s_acctbal"]
-    # fingerprint-keyed cache, not basename-keyed — see
-    # io.source_fingerprint for why
-    fp = source_fingerprint(f"{sf_dir}/supplier.parquet")
-    if not cached_derivation(path, "_fingerprint", fp):
-        t.supplier.select(*cols).write.mode("overwrite").format(
-            "xml"
-        ).option("rowTag", "supplier").save(path)
-        commit_derivation(path, "_fingerprint", fp)
+    path = derived(
+        f"{_derived_dir(sf_dir)}/supplier_xml",
+        source_fingerprint(f"{sf_dir}/supplier.parquet"),
+        lambda out: supplier.select(*cols)
+        .write.mode("overwrite")
+        .format("xml")
+        .option("rowTag", "supplier")
+        .save(out),
+    )
     return (
         spark.read.format("xml")
         .option("rowTag", "supplier")

@@ -41,7 +41,6 @@ import logging
 import os
 import shutil
 import subprocess
-import tempfile
 
 from collections.abc import Callable, Iterator
 
@@ -134,7 +133,7 @@ def _local_fs_classes() -> str | None:
     None without javac."""
     from pyspark.find_spark_home import _find_spark_home
 
-    from .io import cached_derivation, commit_derivation, source_fingerprint
+    from .io import derived, source_fingerprint
     from .streaming.core import RUNTIME_DIR
 
     javac = shutil.which("javac")
@@ -145,27 +144,20 @@ def _local_fs_classes() -> str | None:
     with open(LOCAL_FS_SOURCE, "rb") as f:
         fingerprint = f"{hashlib.sha256(f.read()).hexdigest()};{source_fingerprint(api[0])}"
     out = f"{RUNTIME_DIR}/jvm/{hashlib.sha256(fingerprint.encode()).hexdigest()[:16]}"
-    if cached_derivation(out, ".complete", fingerprint):
-        return out
-    os.makedirs(os.path.dirname(out), exist_ok=True)
-    tmp = tempfile.mkdtemp(dir=os.path.dirname(out))
-    try:
+
+    def compile_into(tmp: str) -> None:
         # --release 17: Spark 4's minimum JVM, whatever JDK javac comes from
         subprocess.run(
             [javac, "--release", "17", "-cp", api[0], "-d", tmp, LOCAL_FS_SOURCE],
             check=True,
             capture_output=True,
         )
+
+    try:
+        return derived(out, fingerprint, compile_into)
     except subprocess.CalledProcessError as e:
-        shutil.rmtree(tmp, ignore_errors=True)
         _warn_stock_local_fs(f"javac failed: {e.stderr.decode(errors='replace').strip()}")
         return None
-    commit_derivation(tmp, ".complete", fingerprint)
-    try:
-        os.rename(tmp, out)
-    except OSError:  # a concurrent build renamed its copy into place first
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
 
 
 def _local_fs_confs() -> dict[str, str]:

@@ -3,9 +3,10 @@
 The fixture set is parquet-only; the scan_json / scan_csv operators
 need JSON-lines and CSV inputs. We derive them 1:1 from the driver's
 own parquet (no synthetic data) with DuckDB COPY — deterministic
-(ORDER BY key) and idempotent (marker file). Timestamps are exported
-as epoch microseconds (BIGINT) so both engines re-materialize the
-exact same µs timestamp without string-format parsing hazards.
+(ORDER BY key) and built once per source fingerprint (io.derived).
+Timestamps are exported as epoch microseconds (BIGINT) so both engines
+re-materialize the exact same µs timestamp without string-format
+parsing hazards.
 
 Files land under ``RUNTIME_DIR``/derived/<sfname>/ (gitignored);
 ORACLE SQL references the sf0.01 paths, which are generated eagerly at
@@ -19,6 +20,7 @@ import os
 
 import duckdb
 
+from ..io import derived, duck_parquet_src, source_fingerprint
 from ..streaming.core import RUNTIME_DIR
 
 DERIVED_DIR = f"{RUNTIME_DIR}/derived"
@@ -58,25 +60,20 @@ BLOB_DOCS = 200
 def ensure_derived(sf_dir: str) -> str:
     """Create JSONL/CSV/TSV/binary-blob twins of the fixtures for one
     scale factor."""
-    sfname = os.path.basename(sf_dir.rstrip("/"))
-    out = f"{DERIVED_DIR}/{sfname}"
-    # cache keyed on the SOURCE fingerprints, not the dir basename —
-    # see io.source_fingerprint for why
-    from ..io import (
-        cached_derivation,
-        commit_derivation,
-        duck_parquet_src,
-        source_fingerprint,
-    )
-
-    fingerprint = source_fingerprint(
+    # "v5": the twins' format version; a format change bumps it so
+    # existing twins rebuild
+    fingerprint = "v5;" + source_fingerprint(
         f"{sf_dir}/events.parquet",
         f"{sf_dir}/customer.parquet",
         f"{sf_dir}/documents.parquet",
     )
-    if cached_derivation(out, ".complete_v5", fingerprint):
-        return out
-    os.makedirs(out, exist_ok=True)
+    sfname = os.path.basename(sf_dir.rstrip("/"))
+    return derived(
+        f"{DERIVED_DIR}/{sfname}", fingerprint, lambda out: _write_twins(sf_dir, out)
+    )
+
+
+def _write_twins(sf_dir: str, out: str) -> None:
     con = duckdb.connect()
     con.execute(
         f"COPY ({_EVENTS_SELECT.format(events_src=duck_parquet_src(f'{sf_dir}/events.parquet'))}) "
@@ -171,8 +168,6 @@ def ensure_derived(sf_dir: str) -> str:
         for line in fin:
             key = int(line.split(",", 1)[0])
             fout.write(f"x{line}" if key % 13 == 0 else line)
-    commit_derivation(out, ".complete_v5", fingerprint)
-    return out
 
 
 def derived_path(sf_dir: str, fname: str) -> str:

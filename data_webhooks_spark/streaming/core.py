@@ -31,12 +31,7 @@ import duckdb
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import DataStreamWriter
 
-from ..io import (
-    cached_derivation,
-    commit_derivation,
-    duck_parquet_src,
-    source_fingerprint,
-)
+from ..io import derived, duck_parquet_src, source_fingerprint
 from ..session import shuffle_partitions
 
 RUNTIME_DIR = "/root/repo/.runtime"
@@ -55,13 +50,14 @@ N_CHUNKS = 4
 def replay_dir(sf_dir: str, late: bool = False, late_by: int = 1) -> str:
     sfname = os.path.basename(sf_dir.rstrip("/"))
     kind = ("late" if late_by == 1 else f"late{late_by}") if late else "ordered"
-    out = f"{RUNTIME_DIR}/stream/{sfname}/{kind}"
-    # cache keyed on the SOURCE fingerprint, not the dir basename —
-    # see io.source_fingerprint for why
-    fingerprint = source_fingerprint(f"{sf_dir}/events.parquet")
-    if cached_derivation(out, ".complete", fingerprint):
-        return out
-    os.makedirs(out, exist_ok=True)
+    return derived(
+        f"{RUNTIME_DIR}/stream/{sfname}/{kind}",
+        source_fingerprint(f"{sf_dir}/events.parquet"),
+        lambda out: _write_chunks(sf_dir, late, late_by, out),
+    )
+
+
+def _write_chunks(sf_dir: str, late: bool, late_by: int, out: str) -> None:
     con = duckdb.connect()
     # chunk = ts-quartile; late variant demotes event_id%37==0 rows
     # late_by chunks (deterministic late arrivals), capped at the last
@@ -95,8 +91,6 @@ def replay_dir(sf_dir: str, late: bool = False, late_by: int = 1) -> str:
         )
         os.utime(path, (base + i, base + i))  # replay order == chunk order
     con.close()
-    commit_derivation(out, ".complete", fingerprint)
-    return out
 
 
 def read_replay_stream(
@@ -207,12 +201,10 @@ def scratch_dir(kind: str) -> str:
 # this value and STREAM_PY_STATE_PARTITIONS were tuned against a cost
 # that is mostly gone; re-tuning both is open (ROADMAP items 4 and 5).
 # At cluster scale, state partitions must instead scale with key
-# cardinality x executor count — raise via env. Checkpoints here are
-# fresh per run, so the partition count never conflicts with a prior
-# checkpoint's.
-STREAM_STATE_PARTITIONS = int(
-    os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "4")
-)
+# cardinality x executor count (drain's ``state_partitions``).
+# Checkpoints here are fresh per run, so the partition count never
+# conflicts with a prior checkpoint's.
+STREAM_STATE_PARTITIONS = 4
 
 # applyInPandasWithState keys invert the trade (r13 A/B): their
 # per-batch cost is PYTHON-side per-group work (state (de)serialization
@@ -225,10 +217,8 @@ STREAM_STATE_PARTITIONS = int(
 # 4.94/3.07/3.21/3.05 s — 16 is the local[32] sweet spot, while the
 # JVM-stateful keys regress there (tumbling 1.46 -> 2.10 s, session
 # 2.74 -> 3.65 s), hence the per-call override rather than one global.
-# At cluster scale both knobs scale with cores via their envs.
-STREAM_PY_STATE_PARTITIONS = int(
-    os.environ.get("SPARK_GRAFT_PY_STATE_PARTITIONS", "16")
-)
+# At cluster scale both values scale with cores.
+STREAM_PY_STATE_PARTITIONS = 16
 
 
 def drain(

@@ -27,6 +27,7 @@ from decimal import Decimal
 import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import StructType
 
 from ..io import Tables
 from ..norms import dec_sum, o_dec_sum, qnt
@@ -34,6 +35,7 @@ from ..regutil import registrar
 from ..session import tune
 from .core import (
     N_CHUNKS,
+    REPLAY_SCHEMA,
     STREAM_PY_STATE_PARTITIONS,
     checkpoint_dir,
     drain,
@@ -1674,6 +1676,22 @@ def _warehouse_oracle() -> dict:
     return wh_oracle
 
 
+def latest_version(root: str, below: int | None = None) -> int | None:
+    """The newest ``v{n}`` version of the versioned state store under
+    ``root`` (`stream_cdc_apply`, `stream_hll_distinct`), strictly below
+    ``below`` when given, or None if there is none. Each version is read
+    back with the schema of the frame that wrote it, so no micro-batch
+    runs a schema-inference job."""
+    versions = (int(p[1:]) for p in os.listdir(root) if p.startswith("v"))
+    return max((v for v in versions if below is None or v < below), default=None)
+
+
+def _state_schema(spark, partial) -> StructType:
+    """Schema of the state versions ``partial`` folds from replay rows,
+    planned over an empty replay-shaped frame (no job)."""
+    return partial(spark.createDataFrame([], REPLAY_SCHEMA)).schema
+
+
 def _cdc_batch_partial(df: DataFrame) -> DataFrame:
     """Per-user associative state from one slice of the op log: op
     counts, the largest (ts, event_id) key per arm (delete / upsert),
@@ -1769,14 +1787,9 @@ def _cdc_merge_batch(spark, root):
         # which is the exactly-once half the checkpoint alone can't
         # give a foreachBatch sink. Pinned by the kill/resume test in
         # tests/test_streaming_semantics.py.
-        versions = sorted(
-            v
-            for p in os.listdir(root)
-            if p.startswith("v") and (v := int(p[1:])) < batch_id
-        )
-        if versions:
-            prev = spark.read.parquet(f"{root}/v{versions[-1]}")
-            s = prev.select(
+        prev = latest_version(root, below=batch_id)
+        if prev is not None:
+            s = spark.read.schema(part.schema).parquet(f"{root}/v{prev}").select(
                 "user_id",
                 F.col("n_ops").alias("s_n_ops"),
                 F.col("n_deletes").alias("s_n_deletes"),
@@ -1815,8 +1828,9 @@ def _cdc_merge_batch(spark, root):
 def _cdc_read_state(spark, root) -> DataFrame:
     """Derive the serving view from the latest committed CDC state
     version (shared by `stream_cdc_apply` and the kill/resume test)."""
-    versions = sorted(int(p[1:]) for p in os.listdir(root) if p.startswith("v"))
-    st = spark.read.parquet(f"{root}/v{versions[-1]}")
+    st = spark.read.schema(_state_schema(spark, _cdc_batch_partial)).parquet(
+        f"{root}/v{latest_version(root)}"
+    )
     alive = F.when(F.col("upd_key").isNull(), F.lit(False)).otherwise(
         F.col("del_key").isNull()
         | (F.col("upd_key.us") > F.col("del_key.us"))
@@ -1837,26 +1851,29 @@ def _cdc_read_state(spark, root) -> DataFrame:
     )
 
 
+def _hll_batch_partial(df: DataFrame) -> DataFrame:
+    """Per-type HLL sketch of one micro-batch: the state version shape
+    `stream_hll_distinct` folds and stores."""
+    return df.groupBy("event_type").agg(
+        F.hll_sketch_agg("user_id", 14).alias("sk")
+    )
+
+
 def _hll_merge_batch(spark, root):
     """foreachBatch body of `stream_hll_distinct`, exposed so the
     kill/resume test can wrap it with an injected crash."""
 
     def merge_batch(df: DataFrame, batch_id: int) -> None:
-        part = df.groupBy("event_type").agg(
-            F.hll_sketch_agg("user_id", 14).alias("sk")
-        )
+        part = _hll_batch_partial(df)
         # strictly-below filter: replay of an uncommitted batch must
         # not union its own half-written version back in (see
         # stream_cdc_apply.merge_batch)
-        versions = sorted(
-            v
-            for p in os.listdir(root)
-            if p.startswith("v") and (v := int(p[1:])) < batch_id
-        )
-        if versions:
-            prev = spark.read.parquet(f"{root}/v{versions[-1]}")
+        prev = latest_version(root, below=batch_id)
+        if prev is not None:
             part = (
-                prev.unionByName(part)
+                spark.read.schema(part.schema)
+                .parquet(f"{root}/v{prev}")
+                .unionByName(part)
                 .groupBy("event_type")
                 .agg(F.hll_union_agg("sk").alias("sk"))
             )
@@ -1909,8 +1926,9 @@ def stream_hll_distinct(spark, sf_dir):
     # chunking; the versioned store still crosses a batch boundary.
     s = read_replay_stream(spark, sf_dir, files_per_trigger=2)
     drain(s.writeStream.foreachBatch(merge_batch))
-    versions = sorted(int(p[1:]) for p in os.listdir(root) if p.startswith("v"))
-    st = spark.read.parquet(f"{root}/v{versions[-1]}")
+    st = spark.read.schema(_state_schema(spark, _hll_batch_partial)).parquet(
+        f"{root}/v{latest_version(root)}"
+    )
     t = Tables(spark, sf_dir)
     exact = t.events.groupBy("event_type").agg(
         F.countDistinct("user_id").alias("exact_users")

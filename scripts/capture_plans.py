@@ -1,4 +1,6 @@
-"""Capture .explain("formatted") for a set of keys into plans/r12/.
+"""Capture .explain("formatted") for a set of keys into
+plans/$SPARK_GRAFT_PLAN_ROUND/ (default plans/r13/), one
+``<key>_<tag>.txt`` per key.
 
 Usage: python scripts/capture_plans.py before|after [key ...]
 Defaults to the bench.py HEADLINE set when no keys are given.

@@ -555,13 +555,19 @@ COPY = ["nation", "region", "supplier", "part"]
 
 
 def amplify(spark, factor: int) -> str:
+    from data_webhooks_spark.io import derived, source_fingerprint
+
+    sources = [f"{BASE}/{name}.parquet" for name in (*COPY, *AMPLIFY)]
+    return derived(
+        f"{OUT_BASE}/x{factor}",
+        source_fingerprint(*sources),
+        lambda out: _write_amplified(spark, factor, out),
+    )
+
+
+def _write_amplified(spark, factor: int, out: str) -> None:
     from pyspark.sql import functions as F
 
-    out = f"{OUT_BASE}/x{factor}"
-    marker = f"{out}/.complete"
-    if os.path.exists(marker):
-        return out
-    os.makedirs(out, exist_ok=True)
     for name in COPY:
         spark.read.parquet(f"{BASE}/{name}.parquet").write.mode("overwrite").parquet(
             f"{out}/{name}.parquet"
@@ -586,9 +592,6 @@ def amplify(spark, factor: int) -> str:
             .write.mode("overwrite")
             .parquet(f"{out}/{name}.parquet")
         )
-    with open(marker, "w") as f:
-        f.write("ok\n")
-    return out
 
 
 def duck_connect_multi(sf_dir: str):

@@ -22,7 +22,7 @@ from pyspark.sql import types as T
 
 from data_webhooks_spark.io import load_table, table_path
 
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, SF_SMOKE
 
 # column -> set of admissible Spark type classes (materialized by the
 # plain reader, before io.py normalization)
@@ -106,24 +106,97 @@ def test_events_loader_normalizes_ts(spark):
 
 def test_cached_derivation_clears_markerless_partial(tmp_path):
     """ADVICE r8: a crashed derivation leaves a partial dir with NO
-    marker; cached_derivation must clear it so writers without
-    mode('overwrite') don't hard-fail on path-already-exists."""
-    from data_webhooks_spark.io import cached_derivation, commit_derivation
+    marker; io.derived must clear it so writers without
+    mode('overwrite') don't hard-fail on path-already-exists. It also
+    builds in a temp sibling, so a failing build leaves no partial
+    ``out`` behind."""
+    from data_webhooks_spark.io import derived
 
     out = str(tmp_path / "derived")
     os.makedirs(out)
-    with open(f"{out}/part-0.parquet", "w") as f:
+    with open(f"{out}/garbage.parquet", "w") as f:
         f.write("partial garbage")
-    assert cached_derivation(out, "_done", "fp1") is False
-    assert not os.path.exists(out), "markerless partial dir must be cleared"
+    builds = []
+
+    def build(tag):
+        def write(d):
+            builds.append(tag)
+            with open(f"{d}/part-0.parquet", "x") as f:  # no overwrite
+                f.write(tag)
+
+        return write
+
+    assert derived(out, "fp1", build("fp1")) == out
+    assert builds == ["fp1"], "a markerless dir is no cache hit"
+    assert not os.path.exists(f"{out}/garbage.parquet"), (
+        "markerless partial dir must be cleared"
+    )
 
     # normal lifecycle still works: derive, commit, hit
-    os.makedirs(out)
-    commit_derivation(out, "_done", "fp1")
-    assert cached_derivation(out, "_done", "fp1") is True
+    assert derived(out, "fp1", build("again")) == out
+    assert builds == ["fp1"]
     # fingerprint mismatch clears as before
-    assert cached_derivation(out, "_done", "fp2") is False
-    assert not os.path.exists(out)
+    assert derived(out, "fp2", build("fp2")) == out
+    assert builds == ["fp1", "fp2"]
+    with open(f"{out}/part-0.parquet") as f:
+        assert f.read() == "fp2"
+
+    # a build that fails leaves the last complete out and no temp dir
+    def crash(d):
+        with open(f"{d}/part-0.parquet", "w") as f:
+            f.write("half")
+        raise RuntimeError("injected")
+
+    with pytest.raises(RuntimeError):
+        derived(out, "fp3", crash)
+    assert os.listdir(tmp_path) == ["derived"]
+    assert derived(out, "fp2", build("fp2 again")) == out
+    assert builds == ["fp1", "fp2"]
+
+
+def test_derived_artifacts_follow_their_fixture_not_its_basename(spark, tmp_path):
+    """Two fixture dirs with one basename but different customer and
+    embeddings tables: scan_orc's ORC copy and the IVF-PQ codes must
+    each come from their own fixture. Both were once cached under the
+    basename alone, and the second dir was served the first one's
+    rows."""
+    import shutil
+    import uuid
+
+    from data_webhooks_spark import registry
+    from data_webhooks_spark.operators.similarity import _ivfpq_index
+    from data_webhooks_spark.oracle import compare_frames, duck_connect
+    from data_webhooks_spark.schemas import TABLE_NAMES
+    from data_webhooks_spark.sources.derived import DERIVED_DIR
+    from data_webhooks_spark.streaming.core import RUNTIME_DIR
+
+    name = f"sfclone_{uuid.uuid4().hex[:8]}"
+    full, small = str(tmp_path / "a" / name), str(tmp_path / "b" / name)
+    for d in (full, small):
+        os.makedirs(d)
+        for t in TABLE_NAMES:
+            os.symlink(table_path(SF_SMOKE, t), table_path(d, t))
+    for t, n in (("customer", 5), ("embeddings", 40)):
+        os.unlink(table_path(small, t))
+        pq.write_table(
+            pq.read_table(table_path(SF_SMOKE, t)).slice(0, n), table_path(small, t)
+        )
+    scan_orc = registry.queries()["scan_orc"]
+    try:
+        for d in (full, small):
+            got = scan_orc(spark, d).toPandas()
+            con = duck_connect(d)
+            try:
+                want = con.execute(registry.oracle_sql()["scan_orc"]).df()
+            finally:
+                con.close()
+            assert not compare_frames(got, want), d
+            n_vectors = pq.ParquetFile(table_path(d, "embeddings")).metadata.num_rows
+            codes = _ivfpq_index(spark, d)[2]
+            assert spark.read.parquet(codes).count() == n_vectors, d
+    finally:
+        shutil.rmtree(f"{DERIVED_DIR}/{name}", ignore_errors=True)
+        shutil.rmtree(f"{RUNTIME_DIR}/ivfpq/{name}", ignore_errors=True)
 
 
 def test_schema_memo_misses_on_rewrite(spark, tmp_path):

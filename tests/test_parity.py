@@ -6,6 +6,8 @@ the DuckDB SQL at sf0.01 and require an exact order-insensitive match
 Rows-only keys are checked to run and return a sane DataFrame.
 """
 
+import ast
+
 import pytest
 
 from data_webhooks_spark import registry
@@ -70,11 +72,35 @@ def test_registry_invariants():
     assert set(QUERIES) - set(ORACLE) == EXPECTED_ROWS_ONLY
 
 
+def _receiver_names(node) -> list[str]:
+    """Attribute names along a call chain's receiver, outermost first
+    (``spark.read.schema(s)`` -> ["schema", "read"])."""
+    names = []
+    while isinstance(node, (ast.Attribute, ast.Call)):
+        if isinstance(node, ast.Call):
+            node = node.func
+        else:
+            names.append(node.attr)
+            node = node.value
+    return names
+
+
+def _names_marker(text: str) -> bool:
+    """A path or name of a build-done marker file, in any of the
+    conventions the build-once helper (io.derived) replaced."""
+    last = text.rsplit("/", 1)[-1]
+    return last in {"_done", "_SUCCESS", "_fingerprint"} or last.startswith(
+        ".complete"
+    )
+
+
 def test_execution_mechanisms_have_one_implementation():
     """Pins, spread, shuffle-partition overrides and the runtime
     directory each live in one place; an operator reaches them only
-    through regutil, session and streaming.core."""
-    import ast
+    through regutil, session and streaming.core. Build-once artifacts
+    and parquet re-reads live in io: no marker file is named or probed
+    elsewhere, and no parquet read elsewhere runs schema inference
+    (scan_parquet_evolve's mergeSchema read is the operator itself)."""
     import os
     import pathlib
 
@@ -103,7 +129,25 @@ def test_execution_mechanisms_have_one_implementation():
                     and node.func.attr in calls
                 ):
                     calls[node.func.attr].add(f"{mod}.{owner}")
+                if mod != "io" and isinstance(node, ast.Call):
+                    func = node.func
+                    if (
+                        isinstance(func, ast.Attribute)
+                        and func.attr in {"exists", "isfile", "lexists"}
+                        and _receiver_names(func.value) == ["path"]
+                    ):
+                        problems.append(f"{mod}.{owner}: probes a path's existence")
+                    if (
+                        isinstance(func, ast.Attribute)
+                        and func.attr == "parquet"
+                        and "read" in (chain := _receiver_names(func.value))
+                        and "schema" not in chain
+                        and (mod, owner) != ("operators/scans", "scan_parquet_evolve")
+                    ):
+                        problems.append(f"{mod}.{owner}: parquet read infers its schema")
                 if isinstance(node, ast.Constant) and isinstance(node.value, str):
+                    if mod != "io" and _names_marker(node.value):
+                        problems.append(f"{mod}.{owner}: names a marker file")
                     if "spark.sql.shuffle.partitions" in node.value and mod != "session":
                         problems.append(f"{mod}.{owner}: sets shuffle partitions")
                     if root in node.value and not (
@@ -112,7 +156,7 @@ def test_execution_mechanisms_have_one_implementation():
                         and [t.id for t in top.targets] == ["RUNTIME_DIR"]
                     ):
                         problems.append(f"{mod}.{owner}: absolute repo-root literal")
-    assert not problems
+    assert not problems, problems
     assert calls["persist"] == {
         "regutil.pin",
         "operators/similarity._ivfpq_codebooks",  # scoped index-build persist

@@ -818,7 +818,8 @@ def test_snapshot_commit_isolation_and_atomicity(spark, sf_dir):
     (a) v3 contains no deleted type while v1/v2 still do; (b) v1 and
     v2 counts are IDENTICAL to scan_snapshot_manifest's (the delete
     commit did not disturb prior snapshots); (c) the v3 manifest lists
-    only data_v3 files, every one existing on disk, and no .tmp
+    only data_v3 files, every one existing on disk under the table
+    dir, and no .tmp
     manifest is left behind (the atomic-publish contract)."""
     import glob
     import json
@@ -850,7 +851,8 @@ def test_snapshot_commit_isolation_and_atomicity(spark, sf_dir):
     with open(f"{path}/_manifests/v3.json") as f:
         files = json.load(f)["files"]
     assert files and all("data_v3" in f for f in files)
-    assert all(os.path.exists(f) for f in files)
+    # manifest entries are relative to the table dir
+    assert all(os.path.exists(f"{path}/{f}") for f in files)
     assert not glob.glob(f"{path}/_manifests/*.tmp")
     # v3 row total equals v2 minus the deleted type's v2 count
     v2c = got[got.version == 2].set_index("event_type")["n"]
